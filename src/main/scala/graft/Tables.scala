@@ -30,16 +30,33 @@ object Tables {
   // query construction (~2 loads × 229 queries × 4 bench passes,
   // each re-listing the directory and re-reading the footer on the
   // driver). Every execution still reads the parquet files — no data or
-  // results are cached. Cleared with the model memos (cold mode pays
-  // the listing again; cycled sessions release their plans).
-  private val frameMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-  graft.operators.Memos.register(() => frameMemo.clear())
+  // results are cached. Valid while the dir's fingerprint holds, and
+  // cleared with the model memos (cold mode pays the listing again;
+  // cycled sessions release their plans).
+  private val frameMemo = graft.operators.Memos
+    .memo[(SparkSession, String, String), DataFrame](k => fingerprint(k._1, k._2))
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    frameMemo.computeIfAbsent((spark, sfDir, name), _ =>
+    frameMemo((spark, sfDir, name)) {
       if (name == "events") adaptEventsTs(eventsRaw(spark, sfDir))
-      else connector(sfDir).read(spark, name))
+      else connector(sfDir).read(spark, name)
+    }
+
+  /** The contents of `dir` as a memo validity token: the sorted (path,
+    * size, mtime) of every file under it (or of `dir` itself when it is
+    * a file), listed through the Hadoop `FileSystem` API. A directory
+    * rewritten in place gets a new fingerprint; a missing one has the
+    * empty fingerprint. */
+  def fingerprint(spark: SparkSession, dir: String): Seq[(String, Long, Long)] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def files(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq.flatMap(st =>
+      if (st.isDirectory) files(st.getPath) else Seq(st))
+    try files(root).map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+      .sorted.toVector
+    catch { case _: java.io.FileNotFoundException => Vector.empty }
+  }
 
   /** `events.ts` has shipped with different physical parquet types across
     * testdata generations: TIMESTAMP(NANOS) (Spark refuses → read as long

@@ -572,40 +572,35 @@ object Multimodal {
     * reads the resulting view; its oracle IS q171's decision twin, so
     * the hash match proves streamed state ≡ batch dedup image-for-image
     * (the q166 convention, applied to the multimodal fold). */
-  private val mediaStreamMemo =
-    scala.collection.mutable.Map.empty[SparkSession, String]
-  graft.operators.Memos.register(
-    () => mediaStreamMemo.synchronized(mediaStreamMemo.clear()))
+  private val mediaStreamMemo = graft.operators.Memos.memo[SparkSession, String]()
   private def mediaStreamState(s: SparkSession): String =
-    mediaStreamMemo.synchronized {
-      mediaStreamMemo.getOrElseUpdate(s, {
-        import s.implicits._
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_media_stream").toString
-        val (state, stage, ckpt) = (s"$root/state", s"$root/stage", s"$root/ckpt")
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stage))
-        val byKey = imageFixtureRows.toMap
-        val batches = Seq(
-          Seq("img1_resized", "img3_copy", "img4"),
-          Seq("img1", "img5", "img9_bad"),
-          Seq("img2", "img2_resized", "img3"))
-        batches.zipWithIndex.foreach { case (keys, i) =>
-          val tmp = s"$root/tmp$i"
-          keys.map(k => k -> byKey(k)).toDF("img_key", "data")
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          java.nio.file.Files.move(part.toPath,
-            java.nio.file.Paths.get(stage, s"b$i.parquet"))
-        }
-        val schema = Seq(("k", Array[Byte](0))).toDF("img_key", "data").schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-        val q = graft.streaming.MediaStream
-          .startImageDedup(stream, state, ckpt).start()
-        q.processAllAvailable(); q.stop()
-        state
-      })
+    mediaStreamMemo(s) {
+      import s.implicits._
+      val root = java.nio.file.Files
+        .createTempDirectory("graft_media_stream").toString
+      val (state, stage, ckpt) = (s"$root/state", s"$root/stage", s"$root/ckpt")
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stage))
+      val byKey = imageFixtureRows.toMap
+      val batches = Seq(
+        Seq("img1_resized", "img3_copy", "img4"),
+        Seq("img1", "img5", "img9_bad"),
+        Seq("img2", "img2_resized", "img3"))
+      batches.zipWithIndex.foreach { case (keys, i) =>
+        val tmp = s"$root/tmp$i"
+        keys.map(k => k -> byKey(k)).toDF("img_key", "data")
+          .coalesce(1).write.mode("overwrite").parquet(tmp)
+        val part = new java.io.File(tmp).listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+        java.nio.file.Files.move(part.toPath,
+          java.nio.file.Paths.get(stage, s"b$i.parquet"))
+      }
+      val schema = Seq(("k", Array[Byte](0))).toDF("img_key", "data").schema
+      val stream = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(stage)
+      val q = graft.streaming.MediaStream
+        .startImageDedup(stream, state, ckpt).start()
+      q.processAllAvailable(); q.stop()
+      state
     }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -189,14 +189,11 @@ object Bpe {
     * (the Similarity.ivfIndexFor precedent). The memoized symbol table
     * is localCheckpoint'd by the training loop, the merge list is a
     * k-row driver value; cold mode (Memos.clearAll) re-pays training. */
-  private val trainMemo = scala.collection.mutable.Map
-    .empty[(SparkSession, String, Int), (DataFrame, Seq[(Long, String, String, Long)])]
-  Memos.register(() => trainMemo.synchronized(trainMemo.clear()))
+  private val trainMemo = Memos.memo[(SparkSession, String, Int),
+    (DataFrame, Seq[(Long, String, String, Long)])](k => Tables.fingerprint(k._1, k._2))
   private def trainSymsFor(s: SparkSession, dir: String, k: Int):
       (DataFrame, Seq[(Long, String, String, Long)]) =
-    trainMemo.synchronized {
-      trainMemo.getOrElseUpdate((s, dir, k), trainSyms(Tables.documents(s, dir), k))
-    }
+    trainMemo((s, dir, k))(trainSyms(Tables.documents(s, dir), k))
 
   /** (w, n_sym) per word TYPE under the memoized DefaultMerges model —
     * the per-type view q181 joins next to the other families'. */

@@ -240,13 +240,10 @@ object Curation {
     * c_st) table of the corpus, so the corpus scan + checkpoint is paid
     * once per session and served at memo cost to the other two (and to
     * repeat runs); cold mode clears it with the other model memos. */
-  private val typeCountsMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  Memos.register(() => typeCountsMemo.synchronized(typeCountsMemo.clear()))
+  private val typeCountsMemo = Memos.dirMemo[DataFrame]
   private def typeCountsFor(s: SparkSession, dir: String): DataFrame =
-    typeCountsMemo.synchronized {
-      typeCountsMemo.getOrElseUpdate((s, dir),
-        typeCountsOf(Tables.documents(s, dir)))
+    typeCountsMemo((s, dir)) {
+      typeCountsOf(Tables.documents(s, dir))
     }
 
   /** (source, n_tokens, kl_e9) — the shared excess-loss proxy both
@@ -464,11 +461,8 @@ object Curation {
     * canonicalized logical plan keys semantically-identical frames
     * built on different calls to the same gate, so each distinct eval
     * frame is counted ONCE per session (the bigram-LM memo precedent);
-    * Memos-cold re-pays it. The count job runs outside the lock — a
-    * racing duplicate count is harmless, first write wins. */
-  private val evalCountMemo = scala.collection.mutable.Map.empty[
-    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan), Long]
-  Memos.register(() => evalCountMemo.synchronized(evalCountMemo.clear()))
+    * Memos-cold re-pays it. */
+  private val evalCountMemo = Memos.planMemo[Long]
 
   /** Memoizing a row count is only sound for frames whose inputs cannot
     * change under the session: a frame scanning a MUTABLE store table
@@ -490,12 +484,8 @@ object Curation {
 
   private def evalCountFor(frame: DataFrame): Long = {
     val analyzed = frame.queryExecution.analyzed
-    if (!sessionConstant(analyzed)) return frame.count()
-    val key = (frame.sparkSession, analyzed.canonicalized)
-    evalCountMemo.synchronized(evalCountMemo.get(key)).getOrElse {
-      val n = frame.count()
-      evalCountMemo.synchronized(evalCountMemo.getOrElseUpdate(key, n))
-    }
+    if (!sessionConstant(analyzed)) frame.count()
+    else evalCountMemo((frame.sparkSession, analyzed.canonicalized))(frame.count())
   }
 
   /** Broadcast `frame` with the bounded-eval CONTRACT ENFORCED — the
@@ -821,14 +811,12 @@ object Curation {
     * the two corpus scans (model learn, feature score) run ONCE per
     * (session, dir, buckets); the checkpointed result is one ~5-column
     * row per doc. `Memos` clearing keeps cold-mode benches honest. */
-  private val dsirMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String, Int), DataFrame]
-  Memos.register(() => dsirMemo.synchronized(dsirMemo.clear()))
+  private val dsirMemo = Memos.memo[(SparkSession, String, Int), DataFrame](
+    k => Tables.fingerprint(k._1, k._2))
   private def dsirScoredMemo(s: SparkSession, dir: String,
                              buckets: Int = 32768): DataFrame =
-    dsirMemo.synchronized {
-      dsirMemo.getOrElseUpdate((s, dir, buckets),
-        dsirScored(Tables.documents(s, dir), buckets).localCheckpoint())
+    dsirMemo((s, dir, buckets)) {
+      dsirScored(Tables.documents(s, dir), buckets).localCheckpoint()
     }
 
   /** q150/q151 shared: learn the DSIR bucket model, score every doc.
@@ -1199,13 +1187,10 @@ object Curation {
     * terciles, q200's head share), and the pair/prefix model join was
     * being re-trained per query (the dsirScoredMemo precedent; one
     * ~3-column row per doc checkpointed). */
-  private val bigramMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  Memos.register(() => bigramMemo.synchronized(bigramMemo.clear()))
+  private val bigramMemo = Memos.dirMemo[DataFrame]
   private[graft] def bigramScoresFor(s: SparkSession, dir: String): DataFrame =
-    bigramMemo.synchronized {
-      bigramMemo.getOrElseUpdate((s, dir),
-        bigramLmScore(Tables.documents(s, dir)).localCheckpoint())
+    bigramMemo((s, dir)) {
+      bigramLmScore(Tables.documents(s, dir)).localCheckpoint()
     }
 
   /** q191 — CCNet's head/middle/tail quality buckets (Wenzek et al.
@@ -1238,14 +1223,11 @@ object Curation {
     * priced the helper's exactness swap at +0.5 s PER CONSUMER RUN
     * (q191 0.15 → 0.66, q200 +1.09 via its re-derived chain) — the
     * scale trade is kept, the repetition is not. */
-  private val ccnetMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  Memos.register(() => ccnetMemo.synchronized(ccnetMemo.clear()))
+  private val ccnetMemo = Memos.dirMemo[DataFrame]
   private[graft] def ccnetBucketsFor(s: SparkSession, dir: String): DataFrame =
-    ccnetMemo.synchronized {
-      ccnetMemo.getOrElseUpdate((s, dir),
-        ccnetBucketsFrom(bigramScoresFor(s, dir), Tables.documents(s, dir))
-          .localCheckpoint())
+    ccnetMemo((s, dir)) {
+      ccnetBucketsFrom(bigramScoresFor(s, dir), Tables.documents(s, dir))
+        .localCheckpoint()
     }
 
   private[graft] def ccnetBucketsFrom(scores: DataFrame, docs: DataFrame): DataFrame =

@@ -139,33 +139,29 @@ object CurationPipeline {
     * eager leaf warm at sf0.1) — so it is materialized eagerly ONCE and
     * served to both queries (the Bpe.trainMemo precedent; Memos-cold
     * re-pays it). */
-  private val qualityMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  Memos.register(() => qualityMemo.synchronized(qualityMemo.clear()))
+  private val qualityMemo = Memos.dirMemo[DataFrame]
   private def qualityFor(s: SparkSession, dir: String): DataFrame =
-    qualityMemo.synchronized {
-      qualityMemo.getOrElseUpdate((s, dir), {
-        val docs = Tables.documents(s, dir)
-        val d1 = Relational.keepFirst(
-          docs.select(col("doc_id"), col("text"), col("source"))
-            .withColumn("fp", md5(col("text"))),
-          Seq("fp"), Seq(col("doc_id"))).drop("fp")
-        // the memoized q139 pass over the RAW corpus is row-identical to
-        // running it on d1: an exact-dup doc's passages are verbatim
-        // copies of its smaller-id keeper's at the same pidx, so it never
-        // wins a packed key and keeps no row — the inner join on d1
-        // restricts to the deduped set (the oracle replays the pass over
-        // d1 and would hash-mismatch if this equivalence broke)
-        val rw = Dedup.passageDedupMemo(s, dir)
-          .join(d1.select("doc_id", "source"), "doc_id")
-          .selectExpr("doc_id", "text_kept AS text", "source",
-            "cast(length(text_kept) as bigint) AS n_chars")
-        val semDrop = Similarity.semanticKeepFor(s, dir)
-          .where("NOT keep").selectExpr("vec_id AS doc_id")
-        val d3 = rw.join(semDrop, Seq("doc_id"), "left_anti")
-        org.apache.spark.sql.graft.PlanBridge.localCheckpointFreshStats(
-          qualityGate(d3))
-      })
+    qualityMemo((s, dir)) {
+      val docs = Tables.documents(s, dir)
+      val d1 = Relational.keepFirst(
+        docs.select(col("doc_id"), col("text"), col("source"))
+          .withColumn("fp", md5(col("text"))),
+        Seq("fp"), Seq(col("doc_id"))).drop("fp")
+      // the memoized q139 pass over the RAW corpus is row-identical to
+      // running it on d1: an exact-dup doc's passages are verbatim
+      // copies of its smaller-id keeper's at the same pidx, so it never
+      // wins a packed key and keeps no row — the inner join on d1
+      // restricts to the deduped set (the oracle replays the pass over
+      // d1 and would hash-mismatch if this equivalence broke)
+      val rw = Dedup.passageDedupMemo(s, dir)
+        .join(d1.select("doc_id", "source"), "doc_id")
+        .selectExpr("doc_id", "text_kept AS text", "source",
+          "cast(length(text_kept) as bigint) AS n_chars")
+      val semDrop = Similarity.semanticKeepFor(s, dir)
+        .where("NOT keep").selectExpr("vec_id AS doc_id")
+      val d3 = rw.join(semDrop, Seq("doc_id"), "left_anti")
+      org.apache.spark.sql.graft.PlanBridge.localCheckpointFreshStats(
+        qualityGate(d3))
     }
 
   /** q214 — v3 EXTENDED with the suffix-array span cut (q204's rewrite
@@ -197,48 +193,40 @@ object CurationPipeline {
     * un-shared, the funnel re-paid the passage grid shuffle AND the
     * whole suffix-array doubling per rep (measured 4.8 s; the memo
     * leaves it the aggregates' cost). The frames are survivor-sized. */
-  private val v4StagesMemo = scala.collection.mutable.Map.empty[
-    (SparkSession, String), (DataFrame, DataFrame, DataFrame)]
-  Memos.register(() => v4StagesMemo.synchronized(v4StagesMemo.clear()))
+  private val v4StagesMemo = Memos.dirMemo[(DataFrame, DataFrame, DataFrame)]
   private def v4StagesFor(s: SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame) =
-    v4StagesMemo.synchronized {
-      v4StagesMemo.getOrElseUpdate((s, dir), {
-        val corpus = SuffixDedup.plantedSpanCorpus(
-          Tables.documents(s, dir), withSource = true)
-        val d1 = Relational.keepFirst(
-          corpus.withColumn("fp", md5(col("text"))),
-          Seq("fp"), Seq(col("doc_id"))).drop("fp").localCheckpoint()
-        val rw = Dedup.passageDedup(d1.select("doc_id", "text"))
-          .join(d1.select("doc_id", "source"), "doc_id")
-          .selectExpr("doc_id", "text_kept AS text", "source")
-          .localCheckpoint()
-        // the flagship stage: every remaining ≥50-token duplicated span
-        // cut from ALL its occurrences (earlyExit off — the plants
-        // guarantee shared prefixes survive every round)
-        val sx = SuffixDedup.suffixCutText(rw.select("doc_id", "text"),
-            earlyExit = false)
-          .join(rw.select("doc_id", "source"), "doc_id")
-          .selectExpr("doc_id", "text_kept AS text", "source",
-            "cast(length(text_kept) as bigint) AS n_chars")
-          .localCheckpoint()
-        (d1, rw, sx)
-      })
+    v4StagesMemo((s, dir)) {
+      val corpus = SuffixDedup.plantedSpanCorpus(
+        Tables.documents(s, dir), withSource = true)
+      val d1 = Relational.keepFirst(
+        corpus.withColumn("fp", md5(col("text"))),
+        Seq("fp"), Seq(col("doc_id"))).drop("fp").localCheckpoint()
+      val rw = Dedup.passageDedup(d1.select("doc_id", "text"))
+        .join(d1.select("doc_id", "source"), "doc_id")
+        .selectExpr("doc_id", "text_kept AS text", "source")
+        .localCheckpoint()
+      // the flagship stage: every remaining ≥50-token duplicated span
+      // cut from ALL its occurrences (earlyExit off — the plants
+      // guarantee shared prefixes survive every round)
+      val sx = SuffixDedup.suffixCutText(rw.select("doc_id", "text"),
+          earlyExit = false)
+        .join(rw.select("doc_id", "source"), "doc_id")
+        .selectExpr("doc_id", "text_kept AS text", "source",
+          "cast(length(text_kept) as bigint) AS n_chars")
+        .localCheckpoint()
+      (d1, rw, sx)
     }
 
-  private val v4QualityMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  Memos.register(() => v4QualityMemo.synchronized(v4QualityMemo.clear()))
+  private val v4QualityMemo = Memos.dirMemo[DataFrame]
   private def v4QualityFor(s: SparkSession, dir: String): DataFrame =
-    v4QualityMemo.synchronized {
-      v4QualityMemo.getOrElseUpdate((s, dir), {
-        val (_, _, sx) = v4StagesFor(s, dir)
-        val semDrop = Similarity.semanticKeepFor(s, dir)
-          .where("NOT keep").selectExpr("vec_id AS doc_id")
-        val d3 = sx.join(semDrop, Seq("doc_id"), "left_anti")
-        org.apache.spark.sql.graft.PlanBridge.localCheckpointFreshStats(
-          qualityGate(d3))
-      })
+    v4QualityMemo((s, dir)) {
+      val (_, _, sx) = v4StagesFor(s, dir)
+      val semDrop = Similarity.semanticKeepFor(s, dir)
+        .where("NOT keep").selectExpr("vec_id AS doc_id")
+      val d3 = sx.join(semDrop, Seq("doc_id"), "left_anti")
+      org.apache.spark.sql.graft.PlanBridge.localCheckpointFreshStats(
+        qualityGate(d3))
     }
 
   private def curateV2plus(s: SparkSession, dir: String,
@@ -280,44 +268,35 @@ object CurationPipeline {
     * survivors' eval slice (the v3 decontam carve), the train slice
     * scrubbed span-surgically, text/n_chars re-derived and the q37
     * quality gate re-applied over the scrubbed text. */
-  private val v5ScrubMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  Memos.register(() => v5ScrubMemo.synchronized(v5ScrubMemo.clear()))
+  private val v5ScrubMemo = Memos.dirMemo[DataFrame]
   private def v5ScrubFor(s: SparkSession, dir: String): DataFrame =
-    v5ScrubMemo.synchronized {
-      v5ScrubMemo.getOrElseUpdate((s, dir), {
-        val quality = v4QualityFor(s, dir)
-        val evalSh = Curation.evalShingleSet(
-          quality.where("doc_id % 97 = 3").select("doc_id", "text"))
-        val train = quality.where("doc_id % 97 != 3")
-        val rebuilt = Curation
-          .decontamScrubText(train.select("doc_id", "text"), evalSh)
-          .join(train.select("doc_id", "source"), "doc_id")
-          .selectExpr("doc_id", "text_kept AS text", "source",
-            "cast(length(text_kept) as bigint) AS n_chars")
-        org.apache.spark.sql.graft.PlanBridge.localCheckpointFreshStats(
-          qualityGate(rebuilt))
-      })
+    v5ScrubMemo((s, dir)) {
+      val quality = v4QualityFor(s, dir)
+      val evalSh = Curation.evalShingleSet(
+        quality.where("doc_id % 97 = 3").select("doc_id", "text"))
+      val train = quality.where("doc_id % 97 != 3")
+      val rebuilt = Curation
+        .decontamScrubText(train.select("doc_id", "text"), evalSh)
+        .join(train.select("doc_id", "source"), "doc_id")
+        .selectExpr("doc_id", "text_kept AS text", "source",
+          "cast(length(text_kept) as bigint) AS n_chars")
+      org.apache.spark.sql.graft.PlanBridge.localCheckpointFreshStats(
+        qualityGate(rebuilt))
     }
 
   /** Per-(session, frame-plan) memo of the Gopher-gate survivor ids
     * over an already-decontaminated frame (v5's tail: the scrub
     * replaced the decontam drop, so [[cleanIdsFor]]'s decontam leg
     * must NOT run again) — the cleanIdsMemo convention, gates only. */
-  private val gopherIdsMemo = scala.collection.mutable.Map.empty[
-    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-    DataFrame]
-  Memos.register(() => gopherIdsMemo.synchronized(gopherIdsMemo.clear()))
+  private val gopherIdsMemo = Memos.planMemo[DataFrame]
   private def gopherIdsFor(s: SparkSession, frame: DataFrame): DataFrame =
-    gopherIdsMemo.synchronized {
-      gopherIdsMemo.getOrElseUpdate(
-        (s, frame.queryExecution.analyzed.canonicalized),
-        frame
-          .join(TextAnalysis.dupLines(frame.select("doc_id", "text"))
-            .where("passes").select("doc_id"), Seq("doc_id"), "left_semi")
-          .join(TextAnalysis.gopherNgrams(frame.select("doc_id", "text"))
-            .where("passes").select("doc_id"), Seq("doc_id"), "left_semi")
-          .select("doc_id").localCheckpoint())
+    gopherIdsMemo((s, frame.queryExecution.analyzed.canonicalized)) {
+      frame
+        .join(TextAnalysis.dupLines(frame.select("doc_id", "text"))
+          .where("passes").select("doc_id"), Seq("doc_id"), "left_semi")
+        .join(TextAnalysis.gopherNgrams(frame.select("doc_id", "text"))
+          .where("passes").select("doc_id"), Seq("doc_id"), "left_semi")
+        .select("doc_id").localCheckpoint()
     }
 
   /** q215 — the curation FUNNEL: per-stage survivor counts and
@@ -413,27 +392,21 @@ object CurationPipeline {
     * plan so v3 (shared qualityFor) and v4 (the planted-corpus variant)
     * memo separately; Memos-cold re-pays, rows are identical by
     * construction (semi-joins on the same id sets). */
-  private val cleanIdsMemo = scala.collection.mutable.Map.empty[
-    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-    (DataFrame, DataFrame)]
-  Memos.register(() => cleanIdsMemo.synchronized(cleanIdsMemo.clear()))
+  private val cleanIdsMemo = Memos.planMemo[(DataFrame, DataFrame)]
   private def cleanIdsFor(s: SparkSession,
       quality: DataFrame): (DataFrame, DataFrame) =
-    cleanIdsMemo.synchronized {
-      cleanIdsMemo.getOrElseUpdate(
-        (s, quality.queryExecution.analyzed.canonicalized), {
-          val dIds = quality.join(
-            Curation.decontaminate(quality.select("doc_id", "text"))
-              .where("NOT contaminated").select("doc_id"),
-            Seq("doc_id"), "left_semi").select("doc_id").localCheckpoint()
-          val gIds = quality.join(dIds, Seq("doc_id"), "left_semi")
-            .join(TextAnalysis.dupLines(quality.select("doc_id", "text"))
-              .where("passes").select("doc_id"), Seq("doc_id"), "left_semi")
-            .join(TextAnalysis.gopherNgrams(quality.select("doc_id", "text"))
-              .where("passes").select("doc_id"), Seq("doc_id"), "left_semi")
-            .select("doc_id").localCheckpoint()
-          (dIds, gIds)
-        })
+    cleanIdsMemo((s, quality.queryExecution.analyzed.canonicalized)) {
+      val dIds = quality.join(
+        Curation.decontaminate(quality.select("doc_id", "text"))
+          .where("NOT contaminated").select("doc_id"),
+        Seq("doc_id"), "left_semi").select("doc_id").localCheckpoint()
+      val gIds = quality.join(dIds, Seq("doc_id"), "left_semi")
+        .join(TextAnalysis.dupLines(quality.select("doc_id", "text"))
+          .where("passes").select("doc_id"), Seq("doc_id"), "left_semi")
+        .join(TextAnalysis.gopherNgrams(quality.select("doc_id", "text"))
+          .where("passes").select("doc_id"), Seq("doc_id"), "left_semi")
+        .select("doc_id").localCheckpoint()
+      (dIds, gIds)
     }
 
   private def curateTail(s: SparkSession, dir: String, quality: DataFrame,
@@ -470,43 +443,39 @@ object CurationPipeline {
     * shard (the q172 convention, applied to the curation fold's new
     * tail). Eval shingles are carved exactly as the batch decontam
     * does: post-dedup, quality-passing eval docs. */
-  private val streamPackMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), String]
-  Memos.register(() => streamPackMemo.synchronized(streamPackMemo.clear()))
+  private val streamPackMemo = Memos.dirMemo[String]
   private def streamStateFor(s: SparkSession, dir: String): String =
-    streamPackMemo.synchronized {
-      streamPackMemo.getOrElseUpdate((s, dir), {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_cur_stream").toString
-        val (state, stage, ckpt) = (s"$root/state", s"$root/stage", s"$root/ckpt")
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stage))
-        val docs = Tables.documents(s, dir)
-          .select("doc_id", "text", "source", "n_chars")
-        (0 until 3).foreach { i =>
-          val tmp = s"$root/tmp$i"
-          docs.where(s"doc_id % 3 = $i").coalesce(1)
-            .write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          java.nio.file.Files.move(part.toPath,
-            java.nio.file.Paths.get(stage, s"b$i.parquet"))
-        }
-        val deduped = Relational.keepFirst(
-          docs.withColumn("fp", org.apache.spark.sql.functions.md5(
-            org.apache.spark.sql.functions.col("text"))),
-          Seq("fp"), Seq(org.apache.spark.sql.functions.col("doc_id"))).drop("fp")
-        val evalSh = Curation.evalShingleSet(
-          qualityGate(deduped).where("doc_id % 97 = 3")
-            .select("doc_id", "text")).localCheckpoint()
-        val stream = s.readStream
-          .schema("doc_id LONG, text STRING, source STRING, n_chars LONG")
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-        val q = graft.streaming.CurationStream
-          .start(stream, evalSh, state, ckpt,
-            model = Some(Bpe.encodeModelFor(s, dir))).start()
-        q.processAllAvailable(); q.stop()
-        state
-      })
+    streamPackMemo((s, dir)) {
+      val root = java.nio.file.Files
+        .createTempDirectory("graft_cur_stream").toString
+      val (state, stage, ckpt) = (s"$root/state", s"$root/stage", s"$root/ckpt")
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stage))
+      val docs = Tables.documents(s, dir)
+        .select("doc_id", "text", "source", "n_chars")
+      (0 until 3).foreach { i =>
+        val tmp = s"$root/tmp$i"
+        docs.where(s"doc_id % 3 = $i").coalesce(1)
+          .write.mode("overwrite").parquet(tmp)
+        val part = new java.io.File(tmp).listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+        java.nio.file.Files.move(part.toPath,
+          java.nio.file.Paths.get(stage, s"b$i.parquet"))
+      }
+      val deduped = Relational.keepFirst(
+        docs.withColumn("fp", org.apache.spark.sql.functions.md5(
+          org.apache.spark.sql.functions.col("text"))),
+        Seq("fp"), Seq(org.apache.spark.sql.functions.col("doc_id"))).drop("fp")
+      val evalSh = Curation.evalShingleSet(
+        qualityGate(deduped).where("doc_id % 97 = 3")
+          .select("doc_id", "text")).localCheckpoint()
+      val stream = s.readStream
+        .schema("doc_id LONG, text STRING, source STRING, n_chars LONG")
+        .option("maxFilesPerTrigger", "1").parquet(stage)
+      val q = graft.streaming.CurationStream
+        .start(stream, evalSh, state, ckpt,
+          model = Some(Bpe.encodeModelFor(s, dir))).start()
+      q.processAllAvailable(); q.stop()
+      state
     }
 
   // ---------------------------------------------------------------- query

@@ -900,14 +900,11 @@ object Dedup {
     * winning packed key and contributes no kept row; the q165 oracle
     * (which replays the pass over the deduped set) would hash-mismatch
     * if this equivalence ever broke. */
-  private val passageMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  Memos.register(() => passageMemo.synchronized(passageMemo.clear()))
+  private val passageMemo = Memos.dirMemo[DataFrame]
   private[operators] def passageDedupMemo(s: SparkSession, dir: String): DataFrame =
-    passageMemo.synchronized {
-      passageMemo.getOrElseUpdate((s, dir),
-        passageDedup(Tables.documents(s, dir).select("doc_id", "text"))
-          .localCheckpoint())
+    passageMemo((s, dir)) {
+      passageDedup(Tables.documents(s, dir).select("doc_id", "text"))
+        .localCheckpoint()
     }
 
   /** q230 — the DEDUP-METHOD AGREEMENT matrix: pairwise agreement and
@@ -964,45 +961,41 @@ object Dedup {
     * the planted-span corpus (doc_id, f_mh, f_sh, f_pa, f_sx) — four
     * heavyweight audited plans feeding one narrow frame, materialized
     * once per dataset per session (Memos-cold re-pays all four). */
-  private val dedupFlagsMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  Memos.register(() => dedupFlagsMemo.synchronized(dedupFlagsMemo.clear()))
+  private val dedupFlagsMemo = Memos.dirMemo[DataFrame]
   private def dedupFlagsFor(s: SparkSession, dir: String): DataFrame =
-    dedupFlagsMemo.synchronized {
-      dedupFlagsMemo.getOrElseUpdate((s, dir), {
-        val corpus = SuffixDedup.plantedSpanCorpus(
-          Tables.documents(s, dir)).localCheckpoint()
-        val mh = minhashNearDups(corpus)
-          .select(col("doc_b").as("doc_id")).distinct()
-          .withColumn("f_mh", lit(true))
-        val sh = simhashPairs(corpus)
-          .select(col("doc_b").as("doc_id")).distinct()
-          .withColumn("f_sh", lit(true))
-        // a doc is passage-flagged iff its kept cell count fell short of
-        // its cell count (docs losing EVERY cell leave the rebuild — the
-        // left join + coalesce(0) covers them)
-        val cells = corpus.selectExpr("doc_id", s"$toksE AS toks")
-          .where("size(toks) > 0")
-          .selectExpr("doc_id",
-            "cast(ceil(size(toks) / 8.0) as bigint) AS n_cells")
-        val pa = cells
-          .join(passageDedup(corpus.select("doc_id", "text"))
-            .select("doc_id", "n_kept"), Seq("doc_id"), "left")
-          .where("coalesce(n_kept, 0L) < n_cells")
-          .select("doc_id").withColumn("f_pa", lit(true))
-        val sx = SuffixDedup.suffixArrayDedup(corpus, earlyExit = false)
-          .where("n_removed > 0")
-          .select("doc_id").withColumn("f_sx", lit(true))
-        corpus.select("doc_id")
-          .join(mh, Seq("doc_id"), "left")
-          .join(sh, Seq("doc_id"), "left")
-          .join(pa, Seq("doc_id"), "left")
-          .join(sx, Seq("doc_id"), "left")
-          .selectExpr("doc_id",
-            "coalesce(f_mh, false) AS f_mh", "coalesce(f_sh, false) AS f_sh",
-            "coalesce(f_pa, false) AS f_pa", "coalesce(f_sx, false) AS f_sx")
-          .localCheckpoint()
-      })
+    dedupFlagsMemo((s, dir)) {
+      val corpus = SuffixDedup.plantedSpanCorpus(
+        Tables.documents(s, dir)).localCheckpoint()
+      val mh = minhashNearDups(corpus)
+        .select(col("doc_b").as("doc_id")).distinct()
+        .withColumn("f_mh", lit(true))
+      val sh = simhashPairs(corpus)
+        .select(col("doc_b").as("doc_id")).distinct()
+        .withColumn("f_sh", lit(true))
+      // a doc is passage-flagged iff its kept cell count fell short of
+      // its cell count (docs losing EVERY cell leave the rebuild — the
+      // left join + coalesce(0) covers them)
+      val cells = corpus.selectExpr("doc_id", s"$toksE AS toks")
+        .where("size(toks) > 0")
+        .selectExpr("doc_id",
+          "cast(ceil(size(toks) / 8.0) as bigint) AS n_cells")
+      val pa = cells
+        .join(passageDedup(corpus.select("doc_id", "text"))
+          .select("doc_id", "n_kept"), Seq("doc_id"), "left")
+        .where("coalesce(n_kept, 0L) < n_cells")
+        .select("doc_id").withColumn("f_pa", lit(true))
+      val sx = SuffixDedup.suffixArrayDedup(corpus, earlyExit = false)
+        .where("n_removed > 0")
+        .select("doc_id").withColumn("f_sx", lit(true))
+      corpus.select("doc_id")
+        .join(mh, Seq("doc_id"), "left")
+        .join(sh, Seq("doc_id"), "left")
+        .join(pa, Seq("doc_id"), "left")
+        .join(sx, Seq("doc_id"), "left")
+        .selectExpr("doc_id",
+          "coalesce(f_mh, false) AS f_mh", "coalesce(f_sh, false) AS f_sh",
+          "coalesce(f_pa, false) AS f_pa", "coalesce(f_sx, false) AS f_sx")
+        .localCheckpoint()
     }
 
   /** q155 — MinHash estimator CALIBRATION: on the banded candidate
@@ -1285,9 +1278,7 @@ object Dedup {
     * the incremental step's plan contains no scan of the old corpus
     * text (the point of incrementality). Cold mode clears the memo and
     * re-pays the build per rep like every other model memo. */
-  private val lshIndexMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), String]
-  Memos.register(() => lshIndexMemo.synchronized(lshIndexMemo.clear()))
+  private val lshIndexMemo = Memos.dirMemo[String]
   /** Per-JVM index root (the GraftMatViews.spillDir convention) — two
     * concurrent JVMs benchmarking the same sfDir get isolated index
     * files instead of overwriting each other's parquet mid-read (the
@@ -1296,29 +1287,24 @@ object Dedup {
   private lazy val lshIndexRoot: String =
     java.nio.file.Files.createTempDirectory("graft_lsh_index").toString
   private def lshIndexDir(s: SparkSession, dir: String): String =
-    lshIndexMemo.synchronized {
-      lshIndexMemo.getOrElseUpdate((s, dir), {
-        val path = lshIndexRoot + "/" + dir.replaceAll("[^A-Za-z0-9]", "_")
-        val sigs = signatures(
-          Tables.documents(s, dir).where("doc_id % 10 != 7")).cache()
-        bandedOf(sigs).write.mode("overwrite").parquet(s"$path/bands")
-        sigs.select("doc_id", "sh").write.mode("overwrite").parquet(s"$path/sh")
-        sigs.unpersist()
-        path
-      })
+    lshIndexMemo((s, dir)) {
+      val path = lshIndexRoot + "/" + dir.replaceAll("[^A-Za-z0-9]", "_")
+      val sigs = signatures(
+        Tables.documents(s, dir).where("doc_id % 10 != 7")).cache()
+      bandedOf(sigs).write.mode("overwrite").parquet(s"$path/bands")
+      sigs.select("doc_id", "sh").write.mode("overwrite").parquet(s"$path/sh")
+      sigs.unpersist()
+      path
     }
 
   /** Per-(session, sfDir) memo of the documents near-dup cluster labels
     * (LSH pairs → label propagation). [[labelPropagateStats]] returns a
     * localCheckpoint'd leaf, so repeat callers read materialized labels
     * instead of re-running the identical iterative pipeline. */
-  private val textLabelsMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  Memos.register(() => textLabelsMemo.synchronized(textLabelsMemo.clear()))
+  private val textLabelsMemo = Memos.dirMemo[DataFrame]
   private def textClusters(s: SparkSession, dir: String): DataFrame =
-    textLabelsMemo.synchronized {
-      textLabelsMemo.getOrElseUpdate((s, dir),
-        nearDupClusters(Tables.documents(s, dir)))
+    textLabelsMemo((s, dir)) {
+      nearDupClusters(Tables.documents(s, dir))
     }
 
   /** The q175 SoftDeDup weight frame — (doc_id, cluster, commonness,

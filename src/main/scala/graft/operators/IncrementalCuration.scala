@@ -477,9 +477,7 @@ object IncrementalCuration {
     * exercises all three retroactive paths (plants collide with
     * batch-1 donors; late eval docs contaminate batch-1 train text;
     * late big docs evict capped batch-1 docs). */
-  private val stateMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), (String, Long)]
-  Memos.register(() => stateMemo.synchronized(stateMemo.clear()))
+  private val stateMemo = Memos.dirMemo[(String, Long)]
   private lazy val stateRoot: String =
     java.nio.file.Files.createTempDirectory("graft_incr_state").toString
 
@@ -488,17 +486,15 @@ object IncrementalCuration {
       .where("NOT keep").selectExpr("vec_id AS doc_id")
 
   private def stateFor(s: SparkSession, dir: String): (String, Long) =
-    stateMemo.synchronized {
-      stateMemo.getOrElseUpdate((s, dir), {
-        val docs = Tables.documents(s, dir)
-        val off = docs.agg(max("doc_id")).first.getLong(0) + 1
-        val split = 2L * off / 3L
-        val corpus = SuffixDedup.plantedSpanCorpus(docs, withSource = true)
-        val path = stateRoot + "/" + dir.replaceAll("[^A-Za-z0-9]", "_")
-        buildState(corpus.where(s"doc_id < ${split}L"), semDropFor(s, dir),
-          Some(Bpe.encodeModelFor(s, dir)), path)
-        (path, split)
-      })
+    stateMemo((s, dir)) {
+      val docs = Tables.documents(s, dir)
+      val off = docs.agg(max("doc_id")).first.getLong(0) + 1
+      val split = 2L * off / 3L
+      val corpus = SuffixDedup.plantedSpanCorpus(docs, withSource = true)
+      val path = stateRoot + "/" + dir.replaceAll("[^A-Za-z0-9]", "_")
+      buildState(corpus.where(s"doc_id < ${split}L"), semDropFor(s, dir),
+        Some(Bpe.encodeModelFor(s, dir)), path)
+      (path, split)
     }
 
   /** Per-(session, sfDir) memo of the FOLDED union survivor frame
@@ -507,24 +503,20 @@ object IncrementalCuration {
     * dataset per session and repeat reads serve the materialized
     * survivors (the house serving-cost convention); Memos-cold clears
     * it and re-pays state build + fold per rep. */
-  private val keptMemo = scala.collection.mutable.Map.empty[
-    (SparkSession, String), (DataFrame, Long)]
-  Memos.register(() => keptMemo.synchronized(keptMemo.clear()))
+  private val keptMemo = Memos.dirMemo[(DataFrame, Long)]
 
   /** The registered q227 surface: phase B over the planted corpus's
     * delta slice against the memoized batch-1 state. The oracle is the
     * q221 batch template over the (whole) union — row-identity IS the
     * incremental ≡ batch proof. */
   def incrementalPipeline(s: SparkSession, dir: String): DataFrame = {
-    val (kept, split) = keptMemo.synchronized {
-      keptMemo.getOrElseUpdate((s, dir), {
-        val (path, split) = stateFor(s, dir)
-        val corpus = SuffixDedup.plantedSpanCorpus(
-          Tables.documents(s, dir), withSource = true)
-        (incrementalKept(s, corpus.where(s"doc_id >= ${split}L"),
-          semDropFor(s, dir), Some(Bpe.encodeModelFor(s, dir)), path)
-          .localCheckpoint(), split)
-      })
+    val (kept, split) = keptMemo((s, dir)) {
+      val (path, split) = stateFor(s, dir)
+      val corpus = SuffixDedup.plantedSpanCorpus(
+        Tables.documents(s, dir), withSource = true)
+      (incrementalKept(s, corpus.where(s"doc_id >= ${split}L"),
+        semDropFor(s, dir), Some(Bpe.encodeModelFor(s, dir)), path)
+        .localCheckpoint(), split)
     }
     summarize(kept, split)
   }

@@ -135,13 +135,9 @@ object ProductQuant {
   /** Per-(session, sfDir) memo of the default-parameter PQ codebooks —
     * q75 and q86 train identical codebooks; the model is a driver-side
     * k×M×SubDim value, so the memo just skips the repeated Lloyd jobs. */
-  private val pqMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), Seq[Seq[Seq[Long]]]]
-  Memos.register(() => pqMemo.synchronized(pqMemo.clear()))
+  private val pqMemo = Memos.dirMemo[Seq[Seq[Seq[Long]]]]
   private def pqTrainFor(s: SparkSession, dir: String): Seq[Seq[Seq[Long]]] =
-    pqMemo.synchronized {
-      pqMemo.getOrElseUpdate((s, dir), pqTrain(Tables.embeddings(s, dir)))
-    }
+    pqMemo((s, dir))(pqTrain(Tables.embeddings(s, dir)))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q75_ann_pq" -> ((s, dir) => {

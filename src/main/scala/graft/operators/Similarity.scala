@@ -405,13 +405,9 @@ object Similarity {
   /** Per-(session, sfDir) memo of the embeddings row count. Banded LSH
     * only needs the corpus SIZE to pick bits/band; one count per dataset
     * per session serves every caller instead of one count per query run. */
-  private val embCountMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), Long]
-  Memos.register(() => embCountMemo.synchronized(embCountMemo.clear()))
+  private val embCountMemo = Memos.dirMemo[Long]
   private def embeddingsCount(s: SparkSession, dir: String): Long =
-    embCountMemo.synchronized {
-      embCountMemo.getOrElseUpdate((s, dir), Tables.embeddings(s, dir).count())
-    }
+    embCountMemo((s, dir))(Tables.embeddings(s, dir).count())
 
   /** The planted near-dup corpus shared by q59/q79: exact copies (+1e6
     * ids) and 1.02-scaled copies (+2e6 ids — same dot signs, so they
@@ -429,22 +425,18 @@ object Similarity {
     * localCheckpoint'd leaf (executor-local blocks, lineage truncated),
     * so the second caller reads the MATERIALIZED labels instead of
     * re-running the identical 10-round pipeline. */
-  private val labelsMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  Memos.register(() => labelsMemo.synchronized(labelsMemo.clear()))
+  private val labelsMemo = Memos.dirMemo[DataFrame]
   private def plantedLabels(s: SparkSession, dir: String): DataFrame =
-    labelsMemo.synchronized {
-      labelsMemo.getOrElseUpdate((s, dir), {
-        val e = Tables.embeddings(s, dir)
-          .selectExpr("vec_id", "cast(embedding as array<double>) AS embedding")
-        val corpus = plantedCorpus(e)
-        // one exact corpus count per dataset per session (hoisted from
-        // lshCandidatesBanded so repeat runs don't re-pay it)
-        val pairs = lshCandidatesBanded(corpus, nHint = Some(corpus.count()))
-          .where("sim >= 0.9").selectExpr("vec_a AS a", "vec_b AS b")
-        val (labels, _) = Dedup.labelPropagateStats(pairs, maxIters = 10)
-        labels
-      })
+    labelsMemo((s, dir)) {
+      val e = Tables.embeddings(s, dir)
+        .selectExpr("vec_id", "cast(embedding as array<double>) AS embedding")
+      val corpus = plantedCorpus(e)
+      // one exact corpus count per dataset per session (hoisted from
+      // lshCandidatesBanded so repeat runs don't re-pay it)
+      val pairs = lshCandidatesBanded(corpus, nHint = Some(corpus.count()))
+        .where("sim >= 0.9").selectExpr("vec_a AS a", "vec_b AS b")
+      val (labels, _) = Dedup.labelPropagateStats(pairs, maxIters = 10)
+      labels
     }
 
   /** q159 — SemDeDup (Abbas et al., 2023): semantic near-duplicate
@@ -482,14 +474,11 @@ object Similarity {
     * the identical decision set; the cluster-local pair join runs once
     * per dataset per session (localCheckpoint: n rows of three
     * scalars). */
-  private val semKeepMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  Memos.register(() => semKeepMemo.synchronized(semKeepMemo.clear()))
+  private val semKeepMemo = Memos.dirMemo[DataFrame]
   private[operators] def semanticKeepFor(s: SparkSession, dir: String): DataFrame =
-    semKeepMemo.synchronized {
-      semKeepMemo.getOrElseUpdate((s, dir),
-        semanticDedup(Tables.embeddings(s, dir), ivfIndexFor(s, dir)._2,
-          tauE6 = 300000L).localCheckpoint())
+    semKeepMemo((s, dir)) {
+      semanticDedup(Tables.embeddings(s, dir), ivfIndexFor(s, dir)._2,
+        tauE6 = 300000L).localCheckpoint()
     }
 
   /** The incremental half of streamed SemDeDup: cluster-local τ-pairs
@@ -647,21 +636,17 @@ object Similarity {
         cid -> rs.sortBy(_.getInt(1)).map(_.getLong(2)).toArray
       }.toSeq
 
-  private val ivfIncMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), (String, String)]
-  Memos.register(() => ivfIncMemo.synchronized(ivfIncMemo.clear()))
+  private val ivfIncMemo = Memos.dirMemo[(String, String)]
   private def ivfIncIndex(s: SparkSession, dir: String): (String, String) =
-    ivfIncMemo.synchronized {
-      ivfIncMemo.getOrElseUpdate((s, dir), {
-        // k and the train-sample modulus derive from the FULL corpus
-        // the index will serve (both dialects count `embeddings`), not
-        // the 90 % training slice — the twin's kp CTE and this call
-        // must agree on n
-        buildPersistedIvfIndex(
-          Tables.embeddings(s, dir).where("vec_id % 10 != 7"),
-          "ivf_idx_" + dir.replaceAll("[^A-Za-z0-9]", "_"),
-          ivfKFor(s, dir), embeddingsCount(s, dir))
-      })
+    ivfIncMemo((s, dir)) {
+      // k and the train-sample modulus derive from the FULL corpus
+      // the index will serve (both dialects count `embeddings`), not
+      // the 90 % training slice — the twin's kp CTE and this call
+      // must agree on n
+      buildPersistedIvfIndex(
+        Tables.embeddings(s, dir).where("vec_id % 10 != 7"),
+        "ivf_idx_" + dir.replaceAll("[^A-Za-z0-9]", "_"),
+        ivfKFor(s, dir), embeddingsCount(s, dir))
     }
 
   /** Per-(session, sfDir) memo of a DRAINED streaming ingest of the
@@ -673,33 +658,29 @@ object Similarity {
     * a hash match proves streamed-state ≡ batch-index balance — the
     * "gate green on the streamed state" half of the retrain loop (the
     * skew-then-retrain half is AnnIngestSpec's). */
-  private val annStreamMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), String]
-  Memos.register(() => annStreamMemo.synchronized(annStreamMemo.clear()))
+  private val annStreamMemo = Memos.dirMemo[String]
   private def annStreamState(s: SparkSession, dir: String): String =
-    annStreamMemo.synchronized {
-      annStreamMemo.getOrElseUpdate((s, dir), {
-        val root = java.nio.file.Files.createTempDirectory("graft_ann_stream").toString
-        val (state, stage, ckpt) = (s"$root/state", s"$root/stage", s"$root/ckpt")
-        ivfIndexFor(s, dir)._1.write.mode("overwrite")
-          .parquet(s"$state/cents/gen=0")
-        val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stage))
-        (0 until 3).foreach { i =>
-          val tmp = s"$root/tmp$i"
-          emb.where(s"vec_id % 3 = $i").coalesce(1)
-            .write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          java.nio.file.Files.move(part.toPath,
-            java.nio.file.Paths.get(stage, s"b$i.parquet"))
-        }
-        val stream = s.readStream.schema(emb.schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-        val q = graft.streaming.AnnIngest.start(stream, state, ckpt).start()
-        q.processAllAvailable(); q.stop()
-        state
-      })
+    annStreamMemo((s, dir)) {
+      val root = java.nio.file.Files.createTempDirectory("graft_ann_stream").toString
+      val (state, stage, ckpt) = (s"$root/state", s"$root/stage", s"$root/ckpt")
+      ivfIndexFor(s, dir)._1.write.mode("overwrite")
+        .parquet(s"$state/cents/gen=0")
+      val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stage))
+      (0 until 3).foreach { i =>
+        val tmp = s"$root/tmp$i"
+        emb.where(s"vec_id % 3 = $i").coalesce(1)
+          .write.mode("overwrite").parquet(tmp)
+        val part = new java.io.File(tmp).listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+        java.nio.file.Files.move(part.toPath,
+          java.nio.file.Paths.get(stage, s"b$i.parquet"))
+      }
+      val stream = s.readStream.schema(emb.schema)
+        .option("maxFilesPerTrigger", "1").parquet(stage)
+      val q = graft.streaming.AnnIngest.start(stream, state, ckpt).start()
+      q.processAllAvailable(); q.stop()
+      state
     }
 
   /** Per-(session, sfDir) memo of the default-parameter IVF index over
@@ -707,17 +688,13 @@ object Similarity {
     * IDENTICAL index; the memo runs the Lloyd loop once and hands both
     * the materialized (centroids, assignments) pair. localCheckpoint on
     * the assignment frame: n rows of two longs, executor-local. */
-  private val ivfMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), (DataFrame, DataFrame)]
-  Memos.register(() => ivfMemo.synchronized(ivfMemo.clear()))
+  private val ivfMemo = Memos.dirMemo[(DataFrame, DataFrame)]
   def ivfIndexFor(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    ivfMemo.synchronized {
-      ivfMemo.getOrElseUpdate((s, dir), {
-        val (n, k) = (embeddingsCount(s, dir), ivfKFor(s, dir))
-        val (cents, asg) = ivfIndex(Tables.embeddings(s, dir), k = k,
-          trainMod = ivfTrainMod(n, k))
-        (cents.localCheckpoint(), asg.localCheckpoint())
-      })
+    ivfMemo((s, dir)) {
+      val (n, k) = (embeddingsCount(s, dir), ivfKFor(s, dir))
+      val (cents, asg) = ivfIndex(Tables.embeddings(s, dir), k = k,
+        trainMod = ivfTrainMod(n, k))
+      (cents.localCheckpoint(), asg.localCheckpoint())
     }
 
   // ---------------------------------------------------------------- queries

@@ -535,18 +535,15 @@ object TextAnalysis {
     * session and served to q199's repeat runs at serving cost; the
     * scale trade (no unpartitioned corpus window, the r16 weak's fix)
     * is kept, its latency is not re-paid per rep. */
-  private val decileMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  Memos.register(() => decileMemo.synchronized(decileMemo.clear()))
+  private val decileMemo = Memos.dirMemo[DataFrame]
   private def decilesFor(s: SparkSession, dir: String): DataFrame =
-    decileMemo.synchronized {
-      decileMemo.getOrElseUpdate((s, dir),
-        Relational.distributedNtile(
-            hashedClassifier(Tables.documents(s, dir))
-              .select("doc_id", "score_e3"),
-            10, Nil, Seq(col("score_e3").desc, col("doc_id")),
-            tileCol = "decile")
-          .localCheckpoint())
+    decileMemo((s, dir)) {
+      Relational.distributedNtile(
+          hashedClassifier(Tables.documents(s, dir))
+            .select("doc_id", "score_e3"),
+          10, Nil, Seq(col("score_e3").desc, col("doc_id")),
+          tileCol = "decile")
+        .localCheckpoint()
     }
 
   /** q141 core: score_e3 = Σ_t ((hash48('qw1_' ⧺ t) mod 2001) − 1000),

@@ -410,31 +410,23 @@ object Unigram {
     * loop's final (s, c) frame) — shared by the q222 decode and the
     * q228 n-best apply, so the two consume the IDENTICAL trained
     * model. */
-  private val prunedInvMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  Memos.register(() => prunedInvMemo.synchronized(prunedInvMemo.clear()))
+  private val prunedInvMemo = Memos.dirMemo[DataFrame]
   private[graft] def prunedInvFor(s: SparkSession, dir: String): DataFrame =
-    prunedInvMemo.synchronized {
-      prunedInvMemo.getOrElseUpdate((s, dir), {
-        val types = WordPiece.wordTypes(Tables.documents(s, dir))
-        pruneHistory(types, PruneRounds).last
-      })
+    prunedInvMemo((s, dir)) {
+      val types = WordPiece.wordTypes(Tables.documents(s, dir))
+      pruneHistory(types, PruneRounds).last
     }
 
   /** Memo of the q222 pruned-model seg frame: the pruned inventory
     * decoded over the corpus types (the final model's scores are the
     * log-ratios of the surviving counts — the twin decodes under the
     * same `pinv` frame). */
-  private val prunedSegMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  Memos.register(() => prunedSegMemo.synchronized(prunedSegMemo.clear()))
+  private val prunedSegMemo = Memos.dirMemo[DataFrame]
   private[graft] def prunedSegFor(s: SparkSession, dir: String): DataFrame =
-    prunedSegMemo.synchronized {
-      prunedSegMemo.getOrElseUpdate((s, dir), {
-        val types = WordPiece.wordTypes(Tables.documents(s, dir))
-        val cands = WordPiece.candidates(types).localCheckpoint()
-        viterbiCounts(cands, scoresOf(prunedInvFor(s, dir))).localCheckpoint()
-      })
+    prunedSegMemo((s, dir)) {
+      val types = WordPiece.wordTypes(Tables.documents(s, dir))
+      val cands = WordPiece.candidates(types).localCheckpoint()
+      viterbiCounts(cands, scoresOf(prunedInvFor(s, dir))).localCheckpoint()
     }
 
   // ------------------------------------------- n-best apply (Kudo §4)
@@ -500,16 +492,12 @@ object Unigram {
   }
 
   /** Memo of the q228 n-best seg frame under the q222 pruned model. */
-  private val nbestSegMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  Memos.register(() => nbestSegMemo.synchronized(nbestSegMemo.clear()))
+  private val nbestSegMemo = Memos.dirMemo[DataFrame]
   private def nbestSegFor(s: SparkSession, dir: String): DataFrame =
-    nbestSegMemo.synchronized {
-      nbestSegMemo.getOrElseUpdate((s, dir), {
-        val types = WordPiece.wordTypes(Tables.documents(s, dir))
-        val cands = WordPiece.candidates(types).localCheckpoint()
-        nbestCounts(cands, scoresOf(prunedInvFor(s, dir))).localCheckpoint()
-      })
+    nbestSegMemo((s, dir)) {
+      val types = WordPiece.wordTypes(Tables.documents(s, dir))
+      val cands = WordPiece.candidates(types).localCheckpoint()
+      nbestCounts(cands, scoresOf(prunedInvFor(s, dir))).localCheckpoint()
     }
 
   /** One round's loss frame from the seed inventory — exposed so
@@ -557,17 +545,13 @@ object Unigram {
   }
 
   /** Memo of the q213 soft-EM fixed-point seg frame. */
-  private val softEmMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  Memos.register(() => softEmMemo.synchronized(softEmMemo.clear()))
+  private val softEmMemo = Memos.dirMemo[DataFrame]
   private[operators] def softEmSegFor(s: SparkSession, dir: String): DataFrame =
-    softEmMemo.synchronized {
-      softEmMemo.getOrElseUpdate((s, dir), {
-        val types = WordPiece.wordTypes(Tables.documents(s, dir))
-        val (hist, _) = softEmHistory(types, SoftEmCap)
-        val cands = WordPiece.candidates(types).localCheckpoint()
-        viterbiCounts(cands, scoresOf(hist.last)).localCheckpoint()
-      })
+    softEmMemo((s, dir)) {
+      val types = WordPiece.wordTypes(Tables.documents(s, dir))
+      val (hist, _) = softEmHistory(types, SoftEmCap)
+      val cands = WordPiece.candidates(types).localCheckpoint()
+      viterbiCounts(cands, scoresOf(hist.last)).localCheckpoint()
     }
 
   /** Corpus Viterbi score (Σ type cnt × path score_e6) under the model
@@ -587,38 +571,28 @@ object Unigram {
   private[graft] val EmCap = 3
 
   /** Per-(session, sfDir) memo (the Bpe.trainMemo precedent). */
-  private val segMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  Memos.register(() => segMemo.synchronized(segMemo.clear()))
+  private val segMemo = Memos.dirMemo[DataFrame]
   private[operators] def segFor(s: SparkSession, dir: String): DataFrame =
-    segMemo.synchronized {
-      segMemo.getOrElseUpdate((s, dir),
-        segCounts(WordPiece.wordTypes(Tables.documents(s, dir))).localCheckpoint())
+    segMemo((s, dir)) {
+      segCounts(WordPiece.wordTypes(Tables.documents(s, dir))).localCheckpoint()
     }
 
   /** Memo of the q184 hard-EM refit seg frame. */
-  private val emMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  Memos.register(() => emMemo.synchronized(emMemo.clear()))
+  private val emMemo = Memos.dirMemo[DataFrame]
   private[operators] def emSegFor(s: SparkSession, dir: String): DataFrame =
-    emMemo.synchronized {
-      emMemo.getOrElseUpdate((s, dir),
-        emRefitCounts(WordPiece.wordTypes(Tables.documents(s, dir)))
-          .localCheckpoint())
+    emMemo((s, dir)) {
+      emRefitCounts(WordPiece.wordTypes(Tables.documents(s, dir)))
+        .localCheckpoint()
     }
 
   /** Memo of the q206 fixed-point (EM^cap) seg frame. */
-  private val emFixMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  Memos.register(() => emFixMemo.synchronized(emFixMemo.clear()))
+  private val emFixMemo = Memos.dirMemo[DataFrame]
   private[operators] def emFixSegFor(s: SparkSession, dir: String): DataFrame =
-    emFixMemo.synchronized {
-      emFixMemo.getOrElseUpdate((s, dir), {
-        val types = WordPiece.wordTypes(Tables.documents(s, dir))
-        val (hist, _) = emHistory(types, EmCap)
-        val cands = WordPiece.candidates(types).localCheckpoint()
-        viterbiCounts(cands, scoresOf(hist.last)).localCheckpoint()
-      })
+    emFixMemo((s, dir)) {
+      val types = WordPiece.wordTypes(Tables.documents(s, dir))
+      val (hist, _) = emHistory(types, EmCap)
+      val cands = WordPiece.candidates(types).localCheckpoint()
+      viterbiCounts(cands, scoresOf(hist.last)).localCheckpoint()
     }
 
   /** q180: the Viterbi segmentation applied back to the corpus — per
@@ -641,19 +615,15 @@ object Unigram {
     * for the q184 refit model: a PRUNED vocabulary can leave interior
     * code points off-inventory, where the kernel's totality fallback
     * (UnkScoreE6) and the in-plan null-arm semantics part ways. */
-  private val encModelMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), graft.plans.UnigramEncodeModel]
-  Memos.register(() => encModelMemo.synchronized(encModelMemo.clear()))
+  private val encModelMemo = Memos.dirMemo[graft.plans.UnigramEncodeModel]
   private[operators] def encodeModelFor(s: SparkSession, dir: String): graft.plans.UnigramEncodeModel =
-    encModelMemo.synchronized {
-      encModelMemo.getOrElseUpdate((s, dir), {
-        val cands = WordPiece.candidates(
-          WordPiece.wordTypes(Tables.documents(s, dir)))
-        val rows = seedScores(cands).collect()
-        new graft.plans.UnigramEncodeModel(
-          rows.map(_.getString(0)), rows.map(_.getLong(1)),
-          WordPiece.MaxPieceLen)
-      })
+    encModelMemo((s, dir)) {
+      val cands = WordPiece.candidates(
+        WordPiece.wordTypes(Tables.documents(s, dir)))
+      val rows = seedScores(cands).collect()
+      new graft.plans.UnigramEncodeModel(
+        rows.map(_.getString(0)), rows.map(_.getLong(1)),
+        WordPiece.MaxPieceLen)
     }
 
   // ---------------------------------------------------------------- queries

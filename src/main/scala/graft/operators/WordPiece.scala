@@ -193,13 +193,10 @@ object WordPiece {
     * q174 and q177 apply the IDENTICAL tokenizer (the Bpe.trainMemo
     * precedent); the walk's final frame is localCheckpoint'd by
     * construction, so repeat queries read materialized counts. */
-  private val segMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  Memos.register(() => segMemo.synchronized(segMemo.clear()))
+  private val segMemo = Memos.dirMemo[DataFrame]
   private[operators] def segFor(s: SparkSession, dir: String): DataFrame =
-    segMemo.synchronized {
-      segMemo.getOrElseUpdate((s, dir),
-        segCounts(wordTypes(Tables.documents(s, dir))))
+    segMemo((s, dir)) {
+      segCounts(wordTypes(Tables.documents(s, dir)))
     }
 
   /** The piece inventory as the SHIPPED artifact (vocab.txt): the
@@ -209,16 +206,12 @@ object WordPiece {
     * bounded-model convention, k-row centroids/BPE merges). Greedy
     * MaxMatch from the same inventory reproduces the trained per-type
     * counts exactly (no tie exists), so q189 reuses q174's twin. */
-  private val modelMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), graft.plans.WordPieceEncodeModel]
-  Memos.register(() => modelMemo.synchronized(modelMemo.clear()))
+  private val modelMemo = Memos.dirMemo[graft.plans.WordPieceEncodeModel]
   private[operators] def encodeModelFor(s: SparkSession, dir: String): graft.plans.WordPieceEncodeModel =
-    modelMemo.synchronized {
-      modelMemo.getOrElseUpdate((s, dir), {
-        val pieces = vocabFrom(candidates(wordTypes(Tables.documents(s, dir))))
-          .select("s").collect().map(_.getString(0))
-        new graft.plans.WordPieceEncodeModel(pieces, MaxPieceLen)
-      })
+    modelMemo((s, dir)) {
+      val pieces = vocabFrom(candidates(wordTypes(Tables.documents(s, dir))))
+        .select("s").collect().map(_.getString(0))
+      new graft.plans.WordPieceEncodeModel(pieces, MaxPieceLen)
     }
 
   // ---------------------------------------------------------------- queries

@@ -573,6 +573,19 @@ object GraftStore {
       bumpOrderEpoch(name) // full rewrite: any row order may change
     }
 
+  /** The schema an overwrite of `name` lands with: the writing query's,
+    * with every column the existing collection declares nullable kept
+    * nullable. A query's schema is often non-null where the table's
+    * (DDL) is not; narrowing would make a later append of nulls fail. */
+  private[v2] def overwriteSchema(name: String, schema: StructType): StructType =
+    store.synchronized(store.get(name)) match {
+      case Some(c) =>
+        val nullable = c.schema.fields.filter(_.nullable).map(_.name).toSet
+        StructType(schema.fields.map(f =>
+          if (nullable(f.name)) f.copy(nullable = true) else f))
+      case None => schema
+    }
+
   /** Register a collection CLUSTERED on a key: exactly one segment per
     * distinct key value (deterministic key order). This is the layout
     * contract behind storage-partitioned joins — the scan can then
@@ -1328,7 +1341,7 @@ object GraftStore {
     if (seen.contains(epochId)) false
     else {
       val key = (if (exists(name)) get(name).shardKey else None).orElse(shardKey)
-      if (truncate) register(name, schema, rows, key,
+      if (truncate) register(name, overwriteSchema(name, schema), rows, key,
         if (numSegments > 0) numSegments
         else store.get(name).map(c => math.max(1, c.segments.size)).getOrElse(8))
       else if (exists(name)) append(name, schema, rows, numSegments)

@@ -916,7 +916,7 @@ class GraftBatchWrite(name: String, schema: StructType, truncate: Boolean,
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val rows = messages.iterator
       .flatMap(_.asInstanceOf[GraftCommitMessage].rows).toVector
-    if (truncate) GraftStore.register(name, schema, rows, shardKey)
+    if (truncate) GraftStore.register(name, GraftStore.overwriteSchema(name, schema), rows, shardKey)
     else GraftStore.append(name, schema, rows)
   }
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()

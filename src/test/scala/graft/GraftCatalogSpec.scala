@@ -386,4 +386,23 @@ class GraftCatalogSpec extends AnyFunSuite {
     spark.sql("DROP TABLE graft_cat.lake.strm")
     GraftStore.drop(src)
   }
+
+  test("INSERT OVERWRITE keeps a DDL table's nullability; a later append of nulls lands") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.lake")
+    spark.sql("CREATE TABLE graft_cat.lake.ow (id BIGINT, v STRING)")
+    // a frame whose own schema is non-null in both columns
+    val nonNull = spark.range(3).selectExpr("id", "cast(id AS string) AS v")
+    assert(!nonNull.schema.exists(_.nullable))
+    nonNull.createOrReplaceTempView("ow_src")
+    spark.sql("INSERT OVERWRITE graft_cat.lake.ow SELECT id, v FROM ow_src")
+    assert(GraftStore.get("lake.ow").schema.forall(_.nullable),
+      s"overwrite narrowed the DDL schema: ${GraftStore.get("lake.ow").schema}")
+    spark.sql("INSERT INTO graft_cat.lake.ow VALUES (7, NULL), (NULL, 'x')")
+    val got = spark.sql("SELECT id, v FROM graft_cat.lake.ow").collect()
+      .map(r => (Option(r.get(0)), Option(r.get(1)))).toSet
+    assert(got == Set[(Option[Any], Option[Any])](
+      (Some(0L), Some("0")), (Some(1L), Some("1")), (Some(2L), Some("2")),
+      (Some(7L), None), (None, Some("x"))))
+    spark.sql("DROP TABLE graft_cat.lake.ow")
+  }
 }
