@@ -46,7 +46,7 @@ object ImageOps {
       }
     } catch { case _: Exception => null }
 
-  val transformImage: UserDefinedFunction = udf(transformImageBytes _)
+  val transformImage: UserDefinedFunction = udf(transformImageBytes _).withName("transformImage")
 
   /** N1 — pixel normalization (the README-claimed step the reference's
     * code never implements: /root/reference/README.md:13 promises it,

@@ -42,24 +42,31 @@ object Chunking {
       .toDF("files_id", "n", "data")
 
   /** A3: chunk rows → `(files_id, data)` with chunks concatenated in `n`
-    * order. Single hash aggregate; the per-group buffer holds one file's
-    * chunks (~MBs), never the whole table. `zero` must match the data
-    * type: `unhex('')` for binary, `''` for string. */
+    * order, one chunk per `n`: a file stored twice under one id (the same
+    * object ingested twice) keeps the least chunk of each ordinal instead
+    * of interleaving both copies. Single hash aggregate; the per-group
+    * buffer holds one file's chunks (~MBs), never the whole table. `zero`
+    * must match the data type: `unhex('')` for binary, `''` for string. */
   def reassemble(chunks: DataFrame, zero: String = "unhex('')"): DataFrame =
     chunks.groupBy(col("files_id")).agg(
-      expr(s"aggregate(array_sort(collect_list(struct(n, data))), $zero, " +
-           "(acc, x) -> concat(acc, x.data))").as("data"))
+      expr(s"aggregate(array_sort(collect_list(struct(n, data))), " +
+           s"named_struct('n', CAST(-1 AS BIGINT), 'data', $zero), " +
+           "(acc, x) -> IF(x.n = acc.n, acc, " +
+           "named_struct('n', CAST(x.n AS BIGINT), 'data', concat(acc.data, x.data))), " +
+           "acc -> acc.data)").as("data"))
 
   /** Aggregation buffer for [[ReassembleBytes]]: the chunks seen so far,
     * in arbitrary order ([[ReassembleBytes.finish]] sorts by ordinal). */
   case class ChunkBuf(ns: Seq[Int], datas: Seq[Array[Byte]])
 
   /** A3 as a typed Aggregator (SURVEY §2.10) — same semantics as
-    * [[reassemble]]; usable via `functions.udaf` where a typed surface or
-    * SQL registration is wanted. Accumulation PREPENDS (O(1) per chunk;
-    * the default Seq is a List, so appending with `:+` would make a
-    * many-chunk file — a multi-GB blob is thousands of 255 KiB chunks —
-    * O(n²) per group); order is restored by the sort in `finish`. */
+    * [[reassemble]], repeated ordinals included (the least chunk by
+    * unsigned byte order wins, as in `array_sort`); usable via
+    * `functions.udaf` where a typed surface or SQL registration is wanted.
+    * Accumulation PREPENDS (O(1) per chunk; the default Seq is a List, so
+    * appending with `:+` would make a many-chunk file — a multi-GB blob is
+    * thousands of 255 KiB chunks — O(n²) per group); order is restored by
+    * the sort in `finish`. */
   class ReassembleBytes extends Aggregator[(Int, Array[Byte]), ChunkBuf, Array[Byte]] {
     def zero: ChunkBuf = ChunkBuf(Nil, Nil)
     def reduce(b: ChunkBuf, a: (Int, Array[Byte])): ChunkBuf =
@@ -68,12 +75,12 @@ object Chunking {
       if (b1.ns.size >= b2.ns.size) ChunkBuf(b2.ns ++: b1.ns, b2.datas ++: b1.datas)
       else ChunkBuf(b1.ns ++: b2.ns, b1.datas ++: b2.datas)
     def finish(b: ChunkBuf): Array[Byte] = {
-      val total = b.datas.iterator.map(_.length).sum
-      val out = new Array[Byte](total)
+      val datas = (b.ns zip b.datas)
+        .groupMapReduce(_._1)(_._2)((x, y) => if (java.util.Arrays.compareUnsigned(x, y) <= 0) x else y)
+        .toSeq.sortBy(_._1).map(_._2)
+      val out = new Array[Byte](datas.iterator.map(_.length).sum)
       var off = 0
-      (b.ns zip b.datas).sortBy(_._1).foreach { case (_, d) =>
-        System.arraycopy(d, 0, out, off, d.length); off += d.length
-      }
+      datas.foreach { d => System.arraycopy(d, 0, out, off, d.length); off += d.length }
       out
     }
     def bufferEncoder: Encoder[ChunkBuf] = Encoders.product[ChunkBuf]

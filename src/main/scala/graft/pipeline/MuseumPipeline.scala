@@ -7,16 +7,30 @@ import graft.functions.ImageOps
 import graft.operators.{Chunking, Relational}
 
 /** The reference's full ETL (E1 ingest → E2 transform/curate,
-  * /root/reference/src/etl_museum_gridfs.py) re-expressed as lazy
-  * DataFrame transforms. Every pass is a pure function over immutable
-  * snapshot tables — the reference's point updates/deletes
+  * the reference's src/etl_museum_gridfs.py) as DataFrame transforms.
+  * Every pass is a pure function over immutable snapshot tables — the
+  * reference's point updates/deletes
   * (transform_load.py:34-43,62-70,116-119,135-142) become recompute +
   * overwrite, per SURVEY.md §7.4.
   *
+  * [[ingest]] and [[transform]] each return several frames that share
+  * one expensive input (the fetched rows; the decoded-and-transformed
+  * images). Each runs one job up front that materializes that input with
+  * `localCheckpoint()` and returns frames over the materialized result,
+  * so a caller writing all of them fetches and transforms each image
+  * once, like the reference (transform_load.py:74-125), not once per
+  * write. The other passes stay lazy.
+  *
   * Scale posture: no driver-side materialization anywhere (the reference
-  * does `list(find({}))` twice — transform_load.py:25,76); image bytes
-  * stay executor-side; joins are key-equi and Catalyst/AQE pick
-  * broadcast vs shuffle; dedup is one shuffle on `object_id`.
+  * does `list(find({}))` twice — transform_load.py:25,76): checkpoint
+  * blocks stay on the executors; image bytes stay executor-side; joins
+  * are key-equi and Catalyst/AQE pick broadcast vs shuffle; dedup is one
+  * shuffle on `object_id`.
+  *
+  * `localCheckpoint` cuts lineage: a lost checkpoint block is not
+  * recomputed, and a job reading it fails loudly instead. The blocks are
+  * freed by Spark's `ContextCleaner` once the returned frames are
+  * unreachable.
   */
 object MuseumPipeline {
 
@@ -43,26 +57,10 @@ object MuseumPipeline {
     */
   def ingest(objects: DataFrame, images: DataFrame, maxDownloads: Int = 20)
       : (DataFrame, DataFrame, DataFrame) = {
-    val fetched = objects
-      .filter(col("status") === 200)                                     // F1
-      .filter(length(trim(coalesce(col("primaryImage"), lit("")))) > 0)  // F2 (Python truthiness: "" excluded)
-      .join(images.filter(col("status") === 200),                        // F3 via inner join
-        col("primaryImage") === col("url"), "inner")
-      .filter(col("bytes").isNotNull)                                    // F6: failed download drops row
-      // L1: filter-then-limit. Ordered first: limit on an unordered frame
-      // picks an arbitrary subset (varies with partitioning/AQE), which
-      // would undercut the deterministic derived ids below. Catalyst plans
-      // sort+limit as TakeOrderedAndProject (per-partition top-k + merge),
-      // not a global sort. The reference's sequential loop is id-ordered
-      // too (ingestion.py:38).
-      .orderBy(col("objectID"), col("primaryImage"))
-      .limit(maxDownloads)
-      // The reference mints a fresh ObjectId per ingested row
-      // (ingestion.py:60); we derive from (objectID, primaryImage) so the
-      // id is deterministic yet distinct for duplicate objectIDs arriving
-      // via different URLs.
-      .withColumn("__seed", concat(col("objectID").cast("string"), lit("|"), col("primaryImage")))
-      .withColumn("gridfs_file_id", hexId(col("__seed")))
+    // one fetch for the files, the chunks and the metadata: a live fetcher
+    // would otherwise download each image once per output, and could
+    // store a file whose chunks came from a different download
+    val fetched = fetch(objects, images, maxDownloads).localCheckpoint()
 
     val blobs = fetched.select(
       col("gridfs_file_id").as("_id"),
@@ -89,6 +87,35 @@ object MuseumPipeline {
     (metadata, files, chunks)                                             // K2: caller writes
   }
 
+  /** The relation [[ingest]] materializes: the fetched rows that pass
+    * F1–F3 and F6, at most `maxDownloads` of them, with their derived ids. */
+  private[pipeline] def fetch(objects: DataFrame, images: DataFrame, maxDownloads: Int)
+      : DataFrame =
+    objects
+      .filter(col("status") === 200)                                     // F1
+      .filter(length(trim(coalesce(col("primaryImage"), lit("")))) > 0)  // F2 (Python truthiness: "" excluded)
+      .join(images.filter(col("status") === 200),                        // F3 via inner join
+        col("primaryImage") === col("url"), "inner")
+      .filter(col("bytes").isNotNull)                                    // F6: failed download drops row
+      // The reference mints a fresh ObjectId per ingested row
+      // (ingestion.py:60); we derive from (objectID, primaryImage) so the
+      // id is deterministic yet distinct for duplicate objectIDs arriving
+      // via different URLs.
+      .withColumn("__seed", concat(col("objectID").cast("string"), lit("|"), col("primaryImage")))
+      .withColumn("gridfs_file_id", hexId(col("__seed")))
+      .select("objectID", "title", "artistDisplayName", "department", "culture", "period",
+        "objectDate", "medium", "primaryImage", "bytes", "__seed", "gridfs_file_id")
+      // L1: filter-then-limit. Ordered first: limit on an unordered frame
+      // picks an arbitrary subset (varies with partitioning/AQE), which
+      // would undercut the deterministic derived ids. The ids are derived
+      // before the limit so that sort+limit is the plan's root and plans
+      // as TakeOrderedAndProject (per-partition top-k + merge, no exchange
+      // over a single partition), not a global sort that shuffles every
+      // fetched image. The reference's sequential loop is id-ordered too
+      // (ingestion.py:38).
+      .orderBy(col("objectID"), col("primaryImage"))
+      .limit(maxDownloads)
+
   /** E2 pass 1 — C1 clean (transform_load.py:21-43): one vectorized
     * select replaces the reference's N+1 update loop. */
   def clean(metadata: DataFrame): DataFrame =
@@ -105,11 +132,16 @@ object MuseumPipeline {
     (kept, victims)
   }
 
-  /** K4 — delete a victim set's blobs from a GridFS bucket by anti-join. */
+  /** K4 — delete a victim set's blobs from a GridFS bucket by anti-join.
+    * Returns one file per `_id`: ids derive from (objectID, primaryImage)
+    * (X3), so ingesting the same object under the same URL twice stores
+    * two catalog rows under one id; the earliest upload is kept. */
   def deleteFiles(files: DataFrame, chunks: DataFrame, victimFileIds: DataFrame)
       : (DataFrame, DataFrame) = {
-    val keptFiles = files.join(victimFileIds.withColumnRenamed(victimFileIds.columns.head, "__vid"),
-      col("_id") === col("__vid"), "left_anti")
+    val keptFiles = Relational.keepFirst(
+      files.join(victimFileIds.withColumnRenamed(victimFileIds.columns.head, "__vid"),
+        col("_id") === col("__vid"), "left_anti"),
+      Seq("_id"), Seq(col("uploadDate"), col("length")))
     val keptChunks = chunks.join(keptFiles.select(col("_id").as("__fid")),
       col("files_id") === col("__fid"), "left_semi")
     (keptFiles, keptChunks)
@@ -119,23 +151,16 @@ object MuseumPipeline {
     *
     * F4 idempotency + F5 FK-present filters, J1/J2 joins, A3 reassembly,
     * I1–I4 image UDF (failure ⇒ row dropped, F6), K5 transformed-bucket
-    * put, K6 lineage update.
+    * put, K6 lineage update. One job materializes [[kernel]]; all three
+    * outputs read it, so each image is decoded once per call.
     * @return (updated metadata, fs_transformed_files, fs_transformed_chunks)
     */
   def transform(metadata: DataFrame, files: DataFrame, chunks: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
-    val todo = metadata
-      .filter(col("transformed_gridfs_file_id").isNull)                   // F4 (re-run safety)
-      .filter(col("gridfs_file_id").isNotNull)                            // F5
-
-    val blobs = Chunking.reassemble(chunks)                               // J2 + A3
-    val transformed = todo
-      .join(files.select(col("_id").as("__fid")),
-        col("gridfs_file_id") === col("__fid"), "inner")                  // J1; dangling FK ⇒ dropped (F6)
-      .join(blobs, col("gridfs_file_id") === col("files_id"), "inner")
-      .withColumn("tbytes", ImageOps.transformImage(col("data")))         // I1–I4
+    // F6 sits above the checkpoint: below it, Catalyst would push
+    // `isnotnull(UDF(data))` under the projection and run the kernel twice
+    val transformed = kernel(metadata, files, chunks).localCheckpoint()
       .filter(col("tbytes").isNotNull)                                    // F6: undecodable ⇒ dropped
-      .withColumn("t_id", hexId(concat(col("object_id"), lit("_transformed"))))
 
     val tBlobs = transformed.select(
       col("t_id").as("_id"),
@@ -150,6 +175,28 @@ object MuseumPipeline {
         coalesce(col("transformed_gridfs_file_id"), col("t_id")))
       .drop("__mid", "t_id")
     (updated, tFiles, tChunks)
+  }
+
+  /** The relation [[transform]] materializes: (`_id`, `object_id`, `t_id`,
+    * `tbytes`) for every not-yet-transformed row whose file is present,
+    * `tbytes` null where the image does not decode. Its plan evaluates the
+    * image UDF once per row. */
+  private[pipeline] def kernel(metadata: DataFrame, files: DataFrame, chunks: DataFrame)
+      : DataFrame = {
+    val todo = metadata
+      .filter(col("transformed_gridfs_file_id").isNull)                   // F4 (re-run safety)
+      .filter(col("gridfs_file_id").isNotNull)                            // F5
+    // F4/F5 below A3: reassemble only the files this pass transforms
+    val wanted = chunks.join(todo.select(col("gridfs_file_id").as("__tid")),
+      col("files_id") === col("__tid"), "left_semi")
+    val blobs = Chunking.reassemble(wanted)                               // J2 + A3
+    todo
+      .join(files.select(col("_id").as("__fid")),
+        col("gridfs_file_id") === col("__fid"), "left_semi")              // J1; dangling FK ⇒ dropped (F6)
+      .join(blobs, col("gridfs_file_id") === col("files_id"), "inner")
+      .select(col("_id"), col("object_id"),
+        hexId(concat(col("object_id"), lit("_transformed"))).as("t_id"),
+        ImageOps.transformImage(col("data")).as("tbytes"))                // I1–I4
   }
 
   /** E2 pass 4 — M1/M2 split labels, 64/16/20 (SURVEY §0.2). Applied to

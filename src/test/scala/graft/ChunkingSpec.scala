@@ -66,4 +66,23 @@ class ChunkingSpec extends AnyFunSuite {
     val out = chunks.groupBy("files_id").agg(agg(col("n"), col("data")).as("data")).collect()
     assert(java.util.Arrays.equals(out(0).getAs[Array[Byte]]("data"), payload))
   }
+
+  test("a repeated ordinal contributes one chunk, the same one in both reassemblies") {
+    val payload = new Array[Byte](2500)
+    new scala.util.Random(5).nextBytes(payload)
+    payload(1000) = 1
+    val chunks = Chunking.split(Seq(("f1", payload)).toDF("_id", "data"), "_id", "data", 1000)
+    // the file stored twice, plus a differing copy of chunk 1 that sorts
+    // after the original by unsigned bytes (0xff > 0x01) but before it
+    // by signed ones
+    val other = payload.slice(1000, 2000)
+    other(0) = (-1).toByte
+    val twice = chunks.union(chunks).union(Seq(("f1", 1, other)).toDF("files_id", "n", "data"))
+    val viaExpr = Chunking.reassemble(twice).collect()
+    assert(viaExpr.length == 1)
+    assert(java.util.Arrays.equals(viaExpr(0).getAs[Array[Byte]]("data"), payload))
+    val agg = udaf(new Chunking.ReassembleBytes)
+    val viaAgg = twice.groupBy("files_id").agg(agg(col("n"), col("data")).as("data")).collect()
+    assert(java.util.Arrays.equals(viaAgg(0).getAs[Array[Byte]]("data"), payload))
+  }
 }
