@@ -2,12 +2,9 @@ package graft.sources.v2
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.parquet.column.ColumnDescriptor
 import org.apache.parquet.column.impl.ColumnReadStoreImpl
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter}
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
@@ -34,8 +31,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * .binaryCompare`, zero-copy) — and surviving rows compact into fresh
   * vectors only when a batch actually loses rows. */
 object GraftColumnar {
-
-  private def conf = new Configuration()
 
   /** ColumnReadStoreImpl wants a converter tree only to probe
     * dictionary support; reading through the typed getters needs none. */
@@ -116,8 +111,7 @@ object GraftColumnar {
         }
         if (reader == null) {
           if (pathIdx >= paths.length) return false
-          reader = ParquetFileReader.open(
-            HadoopInputFile.fromPath(new Path(paths(pathIdx)), conf))
+          reader = GraftParquet.openFile(paths(pathIdx))
           val fileSchema = reader.getFooter.getFileMetaData.getSchema
           reader.setRequestedSchema(
             new MessageType(fileSchema.getName, fileFields(fileSchema).asJava))

@@ -4,9 +4,12 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -38,7 +41,23 @@ import org.apache.spark.sql.types._
   * [[unsupported]] names anything else so callers fail at ingest time,
   * not mid-scan. Timestamps ride INT64 micros both ways (Spark writers
   * must set `spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS`,
-  * which [[GraftStore.loadDisk]] does around its write). */
+  * which [[GraftStore.loadDisk]] does around its write).
+  *
+  * One Hadoop `Configuration` per JVM: building one parses Hadoop's XML
+  * defaults and probes every jar on the classpath for them, which cost
+  * more than decoding a small segment file. So every open, write and
+  * listing here goes through `conf`:
+  *
+  *  - readers share it, read-only;
+  *  - read options are built per open (`HadoopReadOptions.builder(conf)`),
+  *    never shared, because `ParquetFileReader.close()` releases the
+  *    options' codec factory;
+  *  - writers take a copy, because `ExampleParquetWriter` writes the
+  *    schema into its conf and concurrent writers would race on it.
+  *
+  * It is a bare `new Configuration()`, so it reads exactly the settings
+  * each per-file `new Configuration()` read before: Hadoop's defaults
+  * and site files, never a session's `spark.hadoop.*` keys. */
 object GraftParquet {
 
   /** An open, streaming row reader. Self-closes at exhaustion; callers
@@ -50,7 +69,16 @@ object GraftParquet {
     case _ => ()
   }
 
-  private def conf = new Configuration()
+  private lazy val conf: Configuration = {
+    val c = new Configuration()
+    c.size() // parse the XML resources here, once, not in the first reader
+    c
+  }
+
+  /** Open one parquet file for footer, dictionary, bloom or page reads. */
+  private[v2] def openFile(path: String): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf),
+      HadoopReadOptions.builder(conf).build())
 
   /** First schema field (if any) the parquet payload cannot carry. */
   def unsupported(schema: StructType): Option[StructField] =
@@ -90,7 +118,7 @@ object GraftParquet {
             bloom: Map[String, Long] = Map.empty): Long = {
     val msg = messageType(schema)
     var builder = ExampleParquetWriter
-      .builder(new Path(path)).withConf(conf).withType(msg)
+      .builder(new Path(path)).withConf(new Configuration(conf)).withType(msg)
     bloom.foreach { case (c, ndv) =>
       builder = builder.withBloomFilterEnabled(c, true).withBloomFilterNDV(c, ndv)
     }
@@ -198,13 +226,22 @@ object GraftParquet {
     }
   }
 
+  /** Row reader over one file through the shared conf: the
+    * `builder(readSupport, path)` route builds a fresh `Configuration`
+    * in its constructor. */
+  private final class RowReaderBuilder(path: String, readSupport: ReadSupport[Group])
+      extends ParquetReader.Builder[Group](
+        HadoopInputFile.fromPath(new Path(path), conf),
+        new HadoopParquetConfiguration(conf)) {
+    override protected def getReadSupport(): ReadSupport[Group] = readSupport
+  }
+
   /** Stream rows from `paths` in order as external Rows shaped by
     * `schema`. One file open at a time; memory is one row + reader
     * buffers regardless of segment size. Only `schema`'s columns are
     * DECODED — column chunks outside the projection are never read. */
   def openIterator(paths: Seq[String], schema: StructType,
                    constants: Map[Int, Any] = Map.empty): RowIter = new RowIter {
-    private val c = conf
     private val requested = messageType(StructType(
       schema.fields.zipWithIndex
         .filterNot { case (_, i) => constants.contains(i) }.map(_._1)))
@@ -221,9 +258,7 @@ object GraftParquet {
       nextGroup = if (reader == null) null else reader.read()
       while (nextGroup == null && pathIdx < paths.length) {
         closeReader()
-        reader = ParquetReader
-          .builder(new ProjectedReadSupport(requested), new Path(paths(pathIdx)))
-          .withConf(c).build()
+        reader = new RowReaderBuilder(paths(pathIdx), new ProjectedReadSupport(requested)).build()
         pathIdx += 1
         nextGroup = reader.read()
         if (nextGroup != null) convs = converters(nextGroup.getType, schema, constants)
@@ -249,7 +284,7 @@ object GraftParquet {
     * statistics for (parquet drops oversized binary stats; such a
     * column just loses its zone entry, which is always safe). */
   def footerStats(path: String, schema: StructType): (Long, Map[String, (Any, Any)]) = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf))
+    val r = openFile(path)
     try {
       val blocks = r.getFooter.getBlocks.asScala.toVector
       val count = blocks.map(_.getRowCount).sum
@@ -340,7 +375,7 @@ object GraftParquet {
   def bloomFilters(path: String, schema: StructType, cols: Seq[String])
       : Map[String, Vector[ChunkProbe]] = {
     if (cols.isEmpty) return Map.empty
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf))
+    val r = openFile(path)
     try {
       val blocks = r.getFooter.getBlocks.asScala.toVector.filter(_.getRowCount > 0)
       val fileSchema = r.getFooter.getFileMetaData.getSchema

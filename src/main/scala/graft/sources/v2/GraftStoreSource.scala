@@ -180,7 +180,7 @@ class GraftStoreTable(name: String, tableSchema: StructType, batchRows: Int,
 // ---------------------------------------------------------------- read
 
 class GraftScanBuilder(name: String, schema: StructType, batchRows: Int,
-                       planListener: Vector[GraftStore.Segment] => Unit = _ => ())
+                       planListener: Vector[GraftStore.Segment] => Unit = GraftScan.NoListener)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownAggregates
     with SupportsPushDownLimit with SupportsPushDownTopN {
@@ -336,13 +336,36 @@ class GraftAggScan(name: String, aggSchema: StructType, row: Row) extends Scan {
   }
 }
 
-class GraftScan(name: String, fullSchema: StructType, required: StructType,
-                filters: Array[Filter], batchRows: Int,
-                planListener: Vector[GraftStore.Segment] => Unit = _ => (),
-                pushedLimit: Option[Int] = None,
-                topNAsc: Option[Boolean] = None)
-    extends Scan with SupportsReportStatistics with SupportsRuntimeFiltering
-    with SupportsReportPartitioning {
+/** A graft-store read. It is its own [[Batch]] (`toBatch` returns
+  * `this`, as Spark's `FileScan` does) and equal to any scan of the same
+  * read: same `name` (which carries `@v<n>` under time travel),
+  * schemas, pushed filters, `batchRows`, pushed limit and top-k order,
+  * and the same `planListener` instance. `BatchScanExec` compares its
+  * batches, so equal reads in one plan share one exchange or subquery
+  * instead of scanning and shuffling the collection once per read.
+  * Runtime filters stay out: `BatchScanExec` compares those itself.
+  * [[GraftGroupScan]] keeps identity equality, because each one records
+  * the segments it planned on its own row-level operation. */
+class GraftScan(private val name: String, private val fullSchema: StructType,
+                private val required: StructType,
+                private val filters: Array[Filter], private val batchRows: Int,
+                private val planListener: Vector[GraftStore.Segment] => Unit =
+                  GraftScan.NoListener,
+                private val pushedLimit: Option[Int] = None,
+                private val topNAsc: Option[Boolean] = None)
+    extends Scan with Batch with SupportsReportStatistics
+    with SupportsRuntimeFiltering with SupportsReportPartitioning {
+  override def equals(other: Any): Boolean = other match {
+    case o: GraftScan =>
+      name == o.name && fullSchema == o.fullSchema && required == o.required &&
+        filters.toSeq == o.filters.toSeq && batchRows == o.batchRows &&
+        (planListener eq o.planListener) && pushedLimit == o.pushedLimit &&
+        topNAsc == o.topNAsc
+    case _ => false
+  }
+  override def hashCode(): Int =
+    (name, fullSchema, required, filters.toSeq, batchRows, pushedLimit, topNAsc).hashCode
+
   override def readSchema(): StructType = required
   override def description(): String =
     s"graft-store:$name PushedFilters: ${filters.mkString("[", ", ", "]")}, " +
@@ -460,53 +483,58 @@ class GraftScan(name: String, fullSchema: StructType, required: StructType,
       case _ => kept
     }
 
-  override def toBatch: Batch = new Batch {
-    override def planInputPartitions(): Array[InputPartition] = {
-      val coll = GraftStore.get(name)
-      val kept = limitSelect(survivorsIdx)
-      val now = (coll.segments.size.toLong - kept.size, kept.size.toLong)
-      val prev = recordedSkipRead.getAndSet(now)
-      GraftStore.segmentsSkipped.addAndGet(now._1 - prev._1)
-      GraftStore.segmentsRead.addAndGet(now._2 - prev._2)
-      planListener(coll.segments)
-      // global row ordinal of each segment's first row (over ALL
-      // segments, pre-pruning) — the `_pos` metadata column's base
-      val bases = coll.segments.scanLeft(0L)(_ + _.count)
-      coll.clusterKey match {
-        case Some(k) if required.fieldNames.contains(k) && kept.nonEmpty &&
-            kept.forall(_._1.count > 0L) =>
-          val idx = coll.schema.fieldIndex(k)
-          val conv = RowConverters.toCatalyst(coll.schema(idx).dataType)
-          kept.map { case (seg, segId) =>
-            // disk-clustered segments carry the key as a payload constant
-            // (the file omits the partition-directory column) — no reader
-            // open at planning time
-            val keyVal = seg.payload match {
-              case GraftStore.ParquetRows(_, _, _, consts) if consts.contains(idx) =>
-                consts(idx)
-              case _ => seg.firstRow.get.get(idx)
-            }
-            val key = new GenericInternalRow(Array[Any](conv(keyVal)))
-            GraftKeyedInputPartition(seg.payload, key, segId, bases(segId)): InputPartition
-          }.toArray
-        case _ =>
-          kept.map { case (seg, segId) =>
-            GraftInputPartition(seg.payload, segId, bases(segId)): InputPartition
-          }.toArray
-      }
+  override def toBatch: Batch = this
+
+  override def planInputPartitions(): Array[InputPartition] = {
+    val coll = GraftStore.get(name)
+    val kept = limitSelect(survivorsIdx)
+    val now = (coll.segments.size.toLong - kept.size, kept.size.toLong)
+    val prev = recordedSkipRead.getAndSet(now)
+    GraftStore.segmentsSkipped.addAndGet(now._1 - prev._1)
+    GraftStore.segmentsRead.addAndGet(now._2 - prev._2)
+    planListener(coll.segments)
+    // global row ordinal of each segment's first row (over ALL
+    // segments, pre-pruning) — the `_pos` metadata column's base
+    val bases = coll.segments.scanLeft(0L)(_ + _.count)
+    coll.clusterKey match {
+      case Some(k) if required.fieldNames.contains(k) && kept.nonEmpty &&
+          kept.forall(_._1.count > 0L) =>
+        val idx = coll.schema.fieldIndex(k)
+        val conv = RowConverters.toCatalyst(coll.schema(idx).dataType)
+        kept.map { case (seg, segId) =>
+          // disk-clustered segments carry the key as a payload constant
+          // (the file omits the partition-directory column) — no reader
+          // open at planning time
+          val keyVal = seg.payload match {
+            case GraftStore.ParquetRows(_, _, _, consts) if consts.contains(idx) =>
+              consts(idx)
+            case _ => seg.firstRow.get.get(idx)
+          }
+          val key = new GenericInternalRow(Array[Any](conv(keyVal)))
+          GraftKeyedInputPartition(seg.payload, key, segId, bases(segId)): InputPartition
+        }.toArray
+      case _ =>
+        kept.map { case (seg, segId) =>
+          GraftInputPartition(seg.payload, segId, bases(segId)): InputPartition
+        }.toArray
     }
-    override def createReaderFactory(): PartitionReaderFactory =
-      // per-partition early stop: k output rows satisfy a plain LIMIT
-      // from any partition, and (rows being key-ascending within a
-      // segment) the FIRST k of a partition are its smallest for asc
-      // top-k; a desc top-k needs the segment's tail, so it reads the
-      // (suffix-selected) partitions fully and lets Spark sort
-      new GraftReaderFactory(fullSchema, required, allFilters,
-        if (topNAsc.contains(false)) None else pushedLimit)
   }
+  override def createReaderFactory(): PartitionReaderFactory =
+    // per-partition early stop: k output rows satisfy a plain LIMIT
+    // from any partition, and (rows being key-ascending within a
+    // segment) the FIRST k of a partition are its smallest for asc
+    // top-k; a desc top-k needs the segment's tail, so it reads the
+    // (suffix-selected) partitions fully and lets Spark sort
+    new GraftReaderFactory(fullSchema, required, allFilters,
+      if (topNAsc.contains(false)) None else pushedLimit)
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new GraftMicroBatchStream(name, fullSchema, required, filters, batchRows)
+}
+
+object GraftScan {
+  /** The listener of plain reads: one instance, so their scans compare equal. */
+  val NoListener: Vector[GraftStore.Segment] => Unit = _ => ()
 }
 
 /** Sum-aggregated scan metrics (segments read / skipped). Zero-arg
