@@ -27,8 +27,9 @@ import org.apache.spark.sql.types._
   *  - '''openIterator''': stream a segment's rows off disk one at a
   *    time (O(1) memory per reader) — what lets the executor side of a
   *    scan hold a file handle instead of a materialized `Vector[Row]`;
-  *  - '''write''': spill driver-side rows to a parquet file (the
-  *    mutation/relayout path for disk-backed collections);
+  *  - '''open''' / '''write''': encode rows into one segment file —
+  *    push-style from a catalog/DSv2 write task on an executor, or
+  *    from an iterator for the driver's mutation/relayout spills;
   *  - '''footerStats''': row count + per-column min/max from the file
   *    FOOTER — zone maps without reading a single data page, the same
   *    metadata a lakehouse manifest caches. Conservative: a column
@@ -110,22 +111,33 @@ object GraftParquet {
     b.named("graft_segment")
   }
 
-  /** Spill rows to one parquet file; returns the row count. `bloom`
-    * (column → expected NDV) enables parquet-native Bloom filters on
-    * those columns — the format computes them during the write, and
-    * [[bloomFilters]] reads them back for segment skipping. */
-  def write(path: String, schema: StructType, rows: Iterator[Row],
-            bloom: Map[String, Long] = Map.empty): Long = {
-    val msg = messageType(schema)
-    var builder = ExampleParquetWriter
-      .builder(new Path(path)).withConf(new Configuration(conf)).withType(msg)
-    bloom.foreach { case (c, ndv) =>
-      builder = builder.withBloomFilterEnabled(c, true).withBloomFilterNDV(c, ndv)
+  /** One segment file being written, push-style: [[open]] it, [[add]]
+    * rows, [[close]] it. The single encoder behind every store write —
+    * driver-side spills ([[write]]) and the files write tasks land on
+    * executors. `bloom` (column → expected NDV) enables parquet-native
+    * Bloom filters on those columns — the format computes them during
+    * the write, and [[bloomFilters]] reads them back for segment
+    * skipping. */
+  final class SegmentWriter private[GraftParquet] (path: String, schema: StructType,
+                                                   bloom: Map[String, Long])
+      extends java.io.Closeable {
+    private val msg = messageType(schema)
+    private val writer: ParquetWriter[Group] = {
+      var builder = ExampleParquetWriter
+        .builder(new Path(path)).withConf(new Configuration(conf)).withType(msg)
+      bloom.foreach { case (c, ndv) =>
+        builder = builder.withBloomFilterEnabled(c, true).withBloomFilterNDV(c, ndv)
+      }
+      builder.build()
     }
-    val writer: ParquetWriter[Group] = builder.build()
-    val fac = new SimpleGroupFactory(msg)
-    var n = 0L
-    try rows.foreach { r =>
+    private val fac = new SimpleGroupFactory(msg)
+    private var n = 0L
+    private var closed = false
+
+    /** Rows added so far. */
+    def count: Long = n
+
+    def add(r: Row): Unit = {
       val g = fac.newGroup()
       var i = 0
       while (i < schema.length) {
@@ -148,8 +160,35 @@ object GraftParquet {
       }
       writer.write(g)
       n += 1
-    } finally writer.close()
-    n
+    }
+
+    /** Writes the footer. Idempotent. */
+    override def close(): Unit = if (!closed) { closed = true; writer.close() }
+  }
+
+  def open(path: String, schema: StructType,
+           bloom: Map[String, Long] = Map.empty): SegmentWriter =
+    new SegmentWriter(path, schema, bloom)
+
+  /** Spill rows to one parquet file; returns the row count. */
+  def write(path: String, schema: StructType, rows: Iterator[Row],
+            bloom: Map[String, Long] = Map.empty): Long = {
+    val w = open(path, schema, bloom)
+    try rows.foreach(w.add) finally w.close()
+    w.count
+  }
+
+  /** A written file's length in bytes — what the manifest records per
+    * segment, so scan planning packs by size without touching storage. */
+  def fileBytes(path: String): Long = {
+    val p = new Path(path)
+    FileSystem.get(p.toUri, conf).getFileStatus(p).getLen
+  }
+
+  /** Delete one written file (a failed write's leftovers). */
+  def delete(path: String): Unit = {
+    val p = new Path(path)
+    FileSystem.get(p.toUri, conf).delete(p, false)
   }
 
   /** Per-field Group→external extractors for ONE file's schema. A field
@@ -425,22 +464,22 @@ object GraftParquet {
     } finally r.close()
   }
 
-  /** `part-*` data files under `dir`, in name order (range-partitioned
-    * Spark writes number parts in range order, so name order IS key
-    * order). */
-  def listPartFiles(dir: String): Vector[String] = {
+  /** `part-*` data files under `dir` with their lengths, in name order
+    * (range-partitioned Spark writes number parts in range order, so
+    * name order IS key order). */
+  def listPartFiles(dir: String): Vector[(String, Long)] = {
     val p = new Path(dir)
     val fs = FileSystem.get(p.toUri, conf)
     fs.listStatus(p).toVector
       .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
       .sortBy(_.getPath.getName)
-      .map(_.getPath.toString)
+      .map(st => (st.getPath.toString, st.getLen))
   }
 
   /** Hive-style partition directories (`key=value`) under `dir`, as
-    * (decoded value string or null, data files) — the layout
-    * `partitionBy` writes. */
-  def listKeyDirs(dir: String, key: String): Vector[(Option[String], Vector[String])] = {
+    * (decoded value string or null, data files with their lengths) —
+    * the layout `partitionBy` writes. */
+  def listKeyDirs(dir: String, key: String): Vector[(Option[String], Vector[(String, Long)])] = {
     val p = new Path(dir)
     val fs = FileSystem.get(p.toUri, conf)
     fs.listStatus(p).toVector

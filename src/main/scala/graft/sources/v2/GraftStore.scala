@@ -20,10 +20,17 @@ import org.apache.spark.sql.types._
   *    any row is read — the lever that matters at 100 TB, where the
   *    manifest is touched on the driver and only surviving segments
   *    become input partitions;
-  *  - segments embed their rows, so an [[org.apache.spark.sql.connector.read.InputPartition]]
-  *    serializes the segment to the executor that reads it — the same
-  *    life-cycle a real connector has (driver plans from metadata,
-  *    executors fetch their shard), exercised honestly in one JVM.
+  *  - a segment's PAYLOAD is where its rows live: a row vector for an
+  *    in-memory collection, which an
+  *    [[org.apache.spark.sql.connector.read.InputPartition]] carries to
+  *    the executor that reads it; parquet files for a disk-backed one
+  *    (`'payload'='disk'`), whose manifest entry holds only paths, row
+  *    count, zone maps and file bytes. On disk the driver touches
+  *    manifests and executors move bytes: each task of a catalog/DSv2
+  *    batch write lands its own parquet file and commits only its
+  *    manifest entry ([[commitWritten]]), and a scan packs small
+  *    segments into shared read tasks by their recorded bytes — the
+  *    life-cycle a real connector has, exercised honestly in one JVM.
   *
   * Values are stored as plain JVM externals (Long/Int/Double/String/
   * Boolean/Array[Byte]/java.sql.Timestamp) and converted at the scan
@@ -137,8 +144,12 @@ object GraftStore {
     def clear(): Unit = synchronized { lru.clear(); total = 0L }
   }
 
+  /** `bytes`: the disk payload's size in bytes, recorded when the
+    * segment is installed — what scan planning packs read tasks by
+    * without touching storage; -1 for memory payloads. */
   case class Segment(payload: SegmentPayload, zones: Map[String, (Any, Any)],
-                     blooms: Map[String, SegmentBloom] = Map.empty)
+                     blooms: Map[String, SegmentBloom] = Map.empty,
+                     bytes: Long = -1L)
       extends Serializable {
     /** Materializing accessor — driver-side mutation paths only; scans
       * must use [[payload]]/[[iterator]] so disk segments stream. */
@@ -381,13 +392,40 @@ object GraftStore {
       s"incomparable zone-map values: ${a.getClass} vs ${b.getClass}")
   }
 
-  private def zoneMaps(schema: StructType, rows: Vector[Row]): Map[String, (Any, Any)] =
-    schema.fields.iterator.filter(f => comparable(f.dataType)).flatMap { f =>
-      val idx = schema.fieldIndex(f.name)
-      val vals = rows.iterator.map(_.get(idx)).filter(_ != null).toVector
-      if (vals.isEmpty) None
-      else Some(f.name -> (vals.min(Ordering.fromLessThan[Any](cmp(_, _) < 0)),
-                           vals.max(Ordering.fromLessThan[Any](cmp(_, _) < 0))))
+  /** Zone maps accumulated as rows pass: per comparable column, the
+    * min/max over its non-null values (a column with none gets no
+    * entry). Used on the driver over row vectors and inside the write
+    * tasks that land segment files. */
+  private[v2] final class ZoneAcc(schema: StructType) {
+    private val cols = schema.fields.indices.filter(i => comparable(schema(i).dataType)).toArray
+    private val lo = new Array[Any](schema.length)
+    private val hi = new Array[Any](schema.length)
+    def add(r: Row): Unit = cols.foreach { i =>
+      val v = r.get(i)
+      if (v != null) {
+        if (lo(i) == null || cmp(v, lo(i)) < 0) lo(i) = v
+        if (hi(i) == null || cmp(v, hi(i)) > 0) hi(i) = v
+      }
+    }
+    def result: Map[String, (Any, Any)] =
+      cols.iterator.filter(lo(_) != null).map(i => schema(i).name -> (lo(i), hi(i))).toMap
+  }
+
+  private def zoneMaps(schema: StructType, rows: Vector[Row]): Map[String, (Any, Any)] = {
+    val z = new ZoneAcc(schema)
+    rows.foreach(z.add)
+    z.result
+  }
+
+  /** Zone maps of two files read as one segment: per column, the
+    * widest bounds. Columns are INTERSECTED — a column one file has no
+    * zone for cannot keep the other file's bounds (they may not cover
+    * its values), and a dropped zone is always safe. */
+  private def unionZones(a: Map[String, (Any, Any)],
+                         b: Map[String, (Any, Any)]): Map[String, (Any, Any)] =
+    a.keySet.intersect(b.keySet).iterator.map { c =>
+      val ((l0, h0), (l1, h1)) = (a(c), b(c))
+      c -> ((if (cmp(l1, l0) < 0) l1 else l0, if (cmp(h1, h0) > 0) h1 else h0))
     }.toMap
 
   private def shard(schema: StructType, shardKey: Option[String],
@@ -413,6 +451,11 @@ object GraftStore {
       ordered.grouped(per).map(g => Segment(g, zoneMaps(schema, g))).toVector
     }
   }
+
+  /** Segments a collection's first layout gets — a registration, an
+    * overwrite, or the first rows into an empty collection — when the
+    * caller names no count. */
+  val DefaultSegments = 8
 
   /** Monotonic spill-generation counter: every (re-)registration of a
     * disk-backed collection lands its files under a fresh subdirectory,
@@ -486,15 +529,22 @@ object GraftStore {
     * footers on first use through the byte-capped [[BloomCache]] —
     * the 100 TB posture, where NDV-sized filters per row group would
     * otherwise be resident driver RAM per live segment. */
-  private def segBlooms(name: String, path: String,
+  private def segBlooms(name: String, paths: Vector[String],
                         schema: StructType): Map[String, SegmentBloom] = {
     val spec = bloomSpec(name)
     if (spec.isEmpty) Map.empty
     else if (props(name).get("bloom.mode").contains("lazy"))
       spec.keys.toSeq.filter(schema.fieldNames.contains).map(c =>
-        c -> new SegmentBloom(() => BloomCache.get(path, schema, c), 0L)).toMap
-    else GraftParquet.bloomFilters(path, schema, spec.keys.toSeq)
-      .map { case (c, bfs) => c -> new SegmentBloom(bfs) }
+        c -> new SegmentBloom(() => {
+          // one file without a probe set leaves the segment none
+          val ps = paths.map(BloomCache.get(_, schema, c))
+          if (ps.exists(_.isEmpty)) Vector.empty else ps.flatten
+        }, 0L)).toMap
+    else {
+      val per = paths.map(GraftParquet.bloomFilters(_, schema, spec.keys.toSeq))
+      per.head.keys.filter(c => per.forall(_.contains(c)))
+        .map(c => c -> new SegmentBloom(per.flatMap(_(c)))).toMap
+    }
   }
 
   /** Driver-built blooms for MEMORY payload segments — same spec, same
@@ -533,15 +583,20 @@ object GraftStore {
       else s.copy(blooms = memBlooms(name, schema, s.rows))
     }
 
-  /** Spill in-memory segments to parquet under `dir` (zone maps stay as
-    * computed — driver-side rows are exact, no need for footer stats). */
-  private def spill(name: String, schema: StructType, segs: Vector[Segment],
-                    dir: String): Vector[Segment] = {
+  /** Disk payloads carry flat scalar schemas only: refuse anything else
+    * before a file is written. */
+  private def requireDiskSchema(name: String, schema: StructType): Unit =
     GraftParquet.unsupported(schema).foreach { f =>
       throw new IllegalArgumentException(
         s"graft-store: disk payload for '$name' cannot carry column " +
           s"${f.name}: ${f.dataType.catalogString} (flat scalar schemas only)")
     }
+
+  /** Spill in-memory segments to parquet under `dir` (zone maps stay as
+    * computed — driver-side rows are exact, no need for footer stats). */
+  private def spill(name: String, schema: StructType, segs: Vector[Segment],
+                    dir: String): Vector[Segment] = {
+    requireDiskSchema(name, schema)
     val sub = s"$dir/${name.replaceAll("[^A-Za-z0-9._-]", "_")}-g${spillGen.incrementAndGet()}"
     new java.io.File(sub).mkdirs()
     segs.zipWithIndex.map { case (seg, i) =>
@@ -552,7 +607,7 @@ object GraftStore {
         val n = try GraftParquet.write(path, schema, it, bloomSpec(name))
                 finally GraftParquet.closeQuietly(it)
         Segment(ParquetRows(Vector(path), schema, n, Map.empty), seg.zones,
-          segBlooms(name, path, schema))
+          segBlooms(name, Vector(path), schema), GraftParquet.fileBytes(path))
       }
     }
   }
@@ -562,7 +617,7 @@ object GraftStore {
     * (every mutation path funnels here) re-spills to its payload dir
     * unless `payloadDir` explicitly overrides. */
   def register(name: String, schema: StructType, rows: Seq[Row],
-               shardKey: Option[String] = None, numSegments: Int = 8,
+               shardKey: Option[String] = None, numSegments: Int = DefaultSegments,
                payloadDir: Option[String] = None): Unit =
     store.synchronized {
       val dir = payloadDir.orElse(store.get(name).flatMap(_.payloadDir))
@@ -585,6 +640,110 @@ object GraftStore {
           if (nullable(f.name)) f.copy(nullable = true) else f))
       case None => schema
     }
+
+  /** Layout equality = names + types; nullability is a constraint, not
+    * a layout — an INSERT's query schema legitimately arrives
+    * non-nullable against a nullable DDL schema. */
+  private def requireAppendable(name: String, have: StructType, in: StructType): Unit =
+    require(have.fields.map(f => (f.name, f.dataType)).toSeq ==
+        in.fields.map(f => (f.name, f.dataType)).toSeq,
+      s"append schema mismatch for $name: $have vs $in")
+
+  // ------------------------------------------------ task-landed writes
+
+  /** One parquet file a write task landed under the write's generation
+    * dir: its manifest entry (row count, zone maps over its rows, bytes
+    * on disk) and whether any row had a null shard key — the one fact
+    * the order-epoch rule needs that zone maps do not keep. */
+  case class WrittenSegment(path: String, count: Long, zones: Map[String, (Any, Any)],
+                            bytes: Long, nullKey: Boolean)
+
+  /** Is `c`'s payload written by the write tasks themselves? Disk-backed
+    * and unclustered: a clustered layout regroups rows by key, and a
+    * memory payload is the rows. */
+  private def landsFromTasks(c: Collection): Boolean =
+    c.payloadDir.isDefined && c.clusterKey.isEmpty
+
+  /** Start a catalog/DSv2 batch write whose tasks land their own
+    * segment files: a disk-backed collection without a cluster key gets
+    * a fresh generation dir, pinned against [[vacuum]] until
+    * [[commitWritten]] or [[abortWritten]]. None — memory payloads and
+    * clustered layouts, whose rows the driver must see, and names that
+    * are no live collection — means the write ships its rows. */
+  private[v2] def openWrite(name: String, schema: StructType): Option[String] =
+    store.synchronized {
+      store.get(name).filter(landsFromTasks).map { c =>
+        requireDiskSchema(name, schema)
+        freshGenDir(name, c.payloadDir.get)
+      }
+    }
+
+  /** Does a task-landed write into `name` lay the collection out afresh
+    * (an overwrite, or the first rows into an empty collection)? A
+    * sharded one then asks Spark for [[DefaultSegments]] range tasks —
+    * the layout [[register]] gives memory collections — instead of
+    * whatever few tasks adaptive execution coalesces a small write to. */
+  private[v2] def writeLaysOut(name: String, truncate: Boolean): Boolean =
+    store.synchronized {
+      store.get(name).exists(c => landsFromTasks(c) && (truncate || c.rowCount == 0L))
+    }
+
+  /** Driver half of a task-landed write: install the segments the tasks
+    * wrote, atomically under the store lock, then unpin `sub`. A write
+    * adds at most [[DefaultSegments]] segments, however many tasks it
+    * ran: beyond that, consecutive files share one segment (a sharded
+    * write's files are consecutive key ranges, so each segment still
+    * covers one). An append adds them as tail segments (existing
+    * segments survive by reference; into an empty collection they
+    * replace its placeholder); a truncate installs them as the whole
+    * collection with [[overwriteSchema]]. Order-epoch rules are
+    * [[append]]'s and [[register]]'s: a tail append keeps the epoch, a
+    * truncate bumps it, and so does a sharded first append carrying a
+    * null key. A collection dropped or re-laid out mid-write fails the
+    * commit loudly (Spark then aborts it). */
+  private[v2] def commitWritten(name: String, schema: StructType, truncate: Boolean,
+                                shardKey: Option[String], sub: String,
+                                written: Seq[WrittenSegment]): Unit =
+    try {
+      val landed = written.filter(_.count > 0L).toVector
+      val groups =
+        if (landed.isEmpty) Vector.empty
+        else landed.grouped((landed.size + DefaultSegments - 1) / DefaultSegments).toVector
+      // bloom footers are read before the store lock is taken
+      val blooms = groups.map(g => segBlooms(name, g.map(_.path), schema))
+      store.synchronized {
+        val c = store.get(name).filter(landsFromTasks)
+          .getOrElse(throw new IllegalStateException(
+            s"graft-store: '$name' was dropped or re-laid out during the write"))
+        val segSchema =
+          if (truncate) overwriteSchema(name, schema)
+          else { requireAppendable(name, c.schema, schema); c.schema }
+        val segs = groups.zip(blooms).map { case (g, b) =>
+          Segment(ParquetRows(g.map(_.path), segSchema, g.map(_.count).sum),
+            g.map(_.zones).reduce(unionZones), b, g.map(_.bytes).sum)
+        }
+        if (truncate) {
+          install(name, Collection(segSchema, shardKey,
+            if (segs.isEmpty) Vector(Segment(Vector.empty[Row], Map.empty[String, (Any, Any)]))
+            else segs,
+            payloadDir = c.payloadDir))
+          bumpOrderEpoch(name)
+        } else if (segs.nonEmpty) {
+          val first = c.rowCount == 0L
+          install(name, c.copy(segments = (if (first) Vector.empty else c.segments) ++ segs))
+          if (first && c.shardKey.isDefined && written.exists(_.nullKey)) bumpOrderEpoch(name)
+        }
+      }
+    } finally unpin(sub)
+
+  /** Driver half of a failed task-landed write: delete the files the
+    * committed tasks reported and unpin `sub`; a file whose task died
+    * before reporting stays for the next [[vacuum]]. */
+  private[v2] def abortWritten(sub: String, written: Seq[WrittenSegment]): Unit =
+    try written.foreach(w => GraftParquet.delete(w.path)) finally unpin(sub)
+
+  /** Generation dirs an in-flight distributed write has pinned. */
+  private[graft] def pinnedDirs: Set[String] = store.synchronized(pendingDirs.toSet)
 
   /** Register a collection CLUSTERED on a key: exactly one segment per
     * distinct key value (deterministic key order). This is the layout
@@ -634,7 +793,7 @@ object GraftStore {
     * [[loadDisk]]). Guarded: refuses row counts that signal someone
     * shipping the collect path by accident. */
   def load(name: String, df: DataFrame, shardKey: Option[String] = None,
-           numSegments: Int = 8): Unit = {
+           numSegments: Int = DefaultSegments): Unit = {
     guardLoad(name, df)
     register(name, df.schema, df.collect().toIndexedSeq, shardKey, numSegments)
   }
@@ -678,11 +837,7 @@ object GraftStore {
     * the zone-map layout; `sub` comes pre-pinned from [[freshGenDir]]. */
   private def writeSegmentsVia(name: String, df: DataFrame, sub: String)
                               (arrange: DataFrame => DataFrame): Vector[Segment] = {
-    GraftParquet.unsupported(df.schema).foreach { f =>
-      throw new IllegalArgumentException(
-        s"graft-store: disk payload for '$name' cannot carry column " +
-          s"${f.name}: ${f.dataType.catalogString} (flat scalar schemas only)")
-    }
+    requireDiskSchema(name, df.schema)
     val spark = df.sparkSession
     // the reader speaks INT64 micros; INT96 timestamps would not round-trip
     val tsKey = "spark.sql.parquet.outputTimestampType"
@@ -695,10 +850,10 @@ object GraftStore {
       case Some(v) => spark.conf.set(tsKey, v)
       case None => spark.conf.unset(tsKey)
     }
-    GraftParquet.listPartFiles(sub).map { p =>
+    GraftParquet.listPartFiles(sub).map { case (p, bytes) =>
       val (n, zones) = GraftParquet.footerStats(p, df.schema)
       Segment(ParquetRows(Vector(p), df.schema, n), zones,
-        segBlooms(name, p, df.schema))
+        segBlooms(name, Vector(p), df.schema), bytes)
     }.filter(_.count > 0L)
   }
 
@@ -736,7 +891,7 @@ object GraftStore {
       s"graft-store: '$name' is cluster-keyed — its layout is already one segment per key")
     val target =
       if (numSegments > 0) numSegments
-      else math.max(1, math.min(before.segments.size, 8))
+      else math.max(1, math.min(before.segments.size, DefaultSegments))
     before.payloadDir match {
       case Some(dir) =>
         val df = spark.read.format("graft-store").option("name", name).load()
@@ -931,11 +1086,7 @@ object GraftStore {
   def loadClusteredDisk(name: String, df: DataFrame, clusterKey: String,
                         dir: String, numSlices: Int = 64): Unit = {
     import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
-    GraftParquet.unsupported(df.schema).foreach { f =>
-      throw new IllegalArgumentException(
-        s"graft-store: disk payload for '$name' cannot carry column " +
-          s"${f.name}: ${f.dataType.catalogString} (flat scalar schemas only)")
-    }
+    requireDiskSchema(name, df.schema)
     val sub = freshGenDir(name, dir)
     try {
       df.withColumn("__slice", monotonically_increasing_id())
@@ -957,24 +1108,12 @@ object GraftStore {
       }
       val segs = GraftParquet.listKeyDirs(sub, clusterKey).map { case (raw, files) =>
         val key = raw.map(typedKey).orNull
-        var count = 0L
-        var zones = Map.empty[String, (Any, Any)]
-        files.zipWithIndex.foreach { case (f, fi) =>
-          val (n, z) = GraftParquet.footerStats(f, schema)
-          count += n
-          // INTERSECT columns across files: a column one file lacks valid
-          // stats for cannot keep the other file's bounds (they may not
-          // cover its values) — and a dropped zone is always safe
-          zones =
-            if (fi == 0) z
-            else zones.keySet.intersect(z.keySet).iterator.map { c =>
-              val ((l0, h0), (l1, h1)) = (zones(c), z(c))
-              c -> ((if (cmp(l1, l0) < 0) l1 else l0,
-                     if (cmp(h1, h0) > 0) h1 else h0))
-            }.toMap
-        }
+        val stats = files.map(f => GraftParquet.footerStats(f._1, schema))
+        val count = stats.map(_._1).sum
+        var zones = stats.map(_._2).reduceOption(unionZones).getOrElse(Map.empty)
         if (key != null) zones += (clusterKey -> (key, key))
-        (key, Segment(ParquetRows(files, schema, count, Map(keyIdx -> key)), zones))
+        (key, Segment(ParquetRows(files.map(_._1), schema, count, Map(keyIdx -> key)), zones,
+          bytes = files.map(_._2).sum))
       }.sortWith { case ((a, _), (b, _)) =>
         if (a == null) b != null else if (b == null) false else cmp(a, b) < 0
       }.map(_._2)
@@ -1016,15 +1155,10 @@ object GraftStore {
     val segCount =
       if (numSegments > 0) numSegments
       else store.get(name).filter(_.rowCount > 0)
-        .map(c => math.max(1, c.segments.size)).getOrElse(8)
+        .map(c => math.max(1, c.segments.size)).getOrElse(DefaultSegments)
     store.get(name) match {
       case Some(c) =>
-        // layout equality = names + types; nullability is a constraint,
-        // not a layout — an INSERT's query schema legitimately arrives
-        // non-nullable against a nullable DDL schema
-        require(c.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-            schema.fields.map(f => (f.name, f.dataType)).toSeq,
-          s"append schema mismatch for $name: ${c.schema} vs $schema")
+        requireAppendable(name, c.schema, schema)
         c.clusterKey match {
           case Some(k) => registerClustered(name, c.schema, c.rows ++ rows, k)
           // disk-backed: new rows land as a fresh TAIL segment, existing
@@ -1110,7 +1244,7 @@ object GraftStore {
             else {
               val (cnt, zones) = GraftParquet.footerStats(path, coll.schema)
               Segment(ParquetRows(Vector(path), coll.schema, cnt), zones,
-                segBlooms(name, path, coll.schema))
+                segBlooms(name, Vector(path), coll.schema), GraftParquet.fileBytes(path))
             }
           case None =>
             val rows = it.toVector
@@ -1343,10 +1477,10 @@ object GraftStore {
       val key = (if (exists(name)) get(name).shardKey else None).orElse(shardKey)
       if (truncate) register(name, overwriteSchema(name, schema), rows, key,
         if (numSegments > 0) numSegments
-        else store.get(name).map(c => math.max(1, c.segments.size)).getOrElse(8))
+        else store.get(name).map(c => math.max(1, c.segments.size)).getOrElse(DefaultSegments))
       else if (exists(name)) append(name, schema, rows, numSegments)
       else register(name, schema, rows, key,
-        if (numSegments > 0) numSegments else 8)
+        if (numSegments > 0) numSegments else DefaultSegments)
       seen += epochId
       true
     }

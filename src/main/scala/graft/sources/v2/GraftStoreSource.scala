@@ -29,8 +29,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * DSv2 TableProvider, and this one exercises every part of the
   * life-cycle a 1000-executor scan depends on:
   *
-  *  - **planning**: one InputPartition per store segment — parallelism
-  *    follows the data layout, not a driver loop;
+  *  - **planning**: InputPartitions follow the store's segments —
+  *    parallelism follows the data layout, not a driver loop; small
+  *    disk segments pack into shared read tasks by their recorded
+  *    bytes (Spark's file-packing rule); clustered scans keep one per
+  *    segment;
   *  - **filter pushdown** ([[SupportsPushDownFilters]]): claimed filters
   *    are (a) used on the DRIVER to prune whole segments via zone maps
   *    (data skipping — pruned segments are never serialized, shipped,
@@ -38,10 +41,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *    claiming them is sound and Spark plans no residual for them;
   *  - **column pruning** ([[SupportsPushDownRequiredColumns]]): readers
   *    emit only the required columns;
-  *  - **write protocol**: executors buffer their partition and send it
-  *    as a [[WriterCommitMessage]]; the DRIVER commits atomically
-  *    (append or truncate+overwrite) — the standard two-phase DSv2
-  *    commit, so a failed task never half-writes the store;
+  *  - **write protocol**: into a disk-backed collection each task
+  *    writes its partition as one segment file and sends only the
+  *    file's manifest entry; into memory-backed or clustered ones it
+  *    sends its rows. Either way the DRIVER commits atomically (append
+  *    or truncate+overwrite) — the standard two-phase DSv2 commit, so a
+  *    failed task never half-writes the store;
   *  - **micro-batch streaming** ([[MicroBatchStream]]): the collection
   *    replays in bounded row-count batches with durable integer
   *    offsets, so `readStream.format("graft-store")` gets restart/
@@ -427,15 +432,59 @@ class GraftScan(private val name: String, private val fullSchema: StructType,
     * resolvable against the scan's OUTPUT. */
   override def outputPartitioning(): Partitioning = {
     val coll = GraftStore.get(name)
-    val kept = limitSelect(survivorsIdx).map(_._1)
-    coll.clusterKey match {
-      case Some(k) if required.fieldNames.contains(k) && kept.nonEmpty &&
-          kept.forall(_.count > 0L) =>
+    val kept = limitSelect(survivorsIdx)
+    keyedBy(coll, kept) match {
+      case Some(k) =>
         new KeyGroupedPartitioning(
           Array(org.apache.spark.sql.connector.expressions.Expressions.identity(k)),
           kept.size)
-      case _ => new UnknownPartitioning(kept.size)
+      case None => new UnknownPartitioning(packed(coll, kept).length)
     }
+  }
+
+  /** The cluster key a scan's partitions are grouped by: one segment per
+    * partition, each holding one key value. */
+  private def keyedBy(coll: GraftStore.Collection,
+                      kept: Vector[(GraftStore.Segment, Int)]): Option[String] =
+    coll.clusterKey.filter(k => required.fieldNames.contains(k) && kept.nonEmpty &&
+      kept.forall(_._1.count > 0L))
+
+  /** Unclustered read tasks: consecutive surviving segments packed by
+    * Spark's FilePartition rule over the manifest's recorded bytes —
+    * a task takes segments while they fit the split size, each costing
+    * its bytes plus `spark.sql.files.openCostInBytes`, and the split is
+    * Spark's own `FilePartition.maxSplitBytes`: at most
+    * `spark.sql.files.maxPartitionBytes`, shrunk toward total bytes /
+    * parallelism so a mid-size scan still spreads over every core. A
+    * segment without recorded bytes (memory payloads) reads alone. */
+  private def packed(coll: GraftStore.Collection,
+                     kept: Vector[(GraftStore.Segment, Int)]): Array[InputPartition] = {
+    // global row ordinal of each segment's first row (over ALL
+    // segments, pre-pruning) — the `_pos` metadata column's base
+    val bases = coll.segments.scanLeft(0L)(_ + _.count)
+    val spark = org.apache.spark.sql.SparkSession.active
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val maxSplit = org.apache.spark.sql.execution.datasources.FilePartition.maxSplitBytes(
+      spark, kept.iterator.map(_._1.bytes).filter(_ >= 0L).map(_ + openCost).sum)
+    val out = Array.newBuilder[InputPartition]
+    val cur = scala.collection.mutable.ArrayBuffer.empty[GraftInputPartition]
+    var curSize = 0L
+    def close(): Unit = {
+      if (cur.size == 1) out += cur.head
+      else if (cur.size > 1) out += GraftPackedPartition(cur.toVector)
+      cur.clear(); curSize = 0L
+    }
+    kept.foreach { case (seg, segId) =>
+      val part = GraftInputPartition(seg.payload, segId, bases(segId))
+      if (seg.bytes < 0L) { close(); out += part }
+      else {
+        if (curSize + seg.bytes > maxSplit) close()
+        curSize += seg.bytes + openCost
+        cur += part
+      }
+    }
+    close()
+    out.result()
   }
 
   /** First-class DSv2 observability: the scan's pruning evidence rides
@@ -493,12 +542,9 @@ class GraftScan(private val name: String, private val fullSchema: StructType,
     GraftStore.segmentsSkipped.addAndGet(now._1 - prev._1)
     GraftStore.segmentsRead.addAndGet(now._2 - prev._2)
     planListener(coll.segments)
-    // global row ordinal of each segment's first row (over ALL
-    // segments, pre-pruning) — the `_pos` metadata column's base
-    val bases = coll.segments.scanLeft(0L)(_ + _.count)
-    coll.clusterKey match {
-      case Some(k) if required.fieldNames.contains(k) && kept.nonEmpty &&
-          kept.forall(_._1.count > 0L) =>
+    keyedBy(coll, kept) match {
+      case Some(k) =>
+        val bases = coll.segments.scanLeft(0L)(_ + _.count)
         val idx = coll.schema.fieldIndex(k)
         val conv = RowConverters.toCatalyst(coll.schema(idx).dataType)
         kept.map { case (seg, segId) =>
@@ -513,20 +559,21 @@ class GraftScan(private val name: String, private val fullSchema: StructType,
           val key = new GenericInternalRow(Array[Any](conv(keyVal)))
           GraftKeyedInputPartition(seg.payload, key, segId, bases(segId)): InputPartition
         }.toArray
-      case _ =>
-        kept.map { case (seg, segId) =>
-          GraftInputPartition(seg.payload, segId, bases(segId)): InputPartition
-        }.toArray
+      case None => packed(coll, kept)
     }
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    // per-partition early stop: k output rows satisfy a plain LIMIT
-    // from any partition, and (rows being key-ascending within a
-    // segment) the FIRST k of a partition are its smallest for asc
+    // per-segment early stop: k output rows satisfy a plain LIMIT
+    // from any segment, and (rows being key-ascending within a
+    // segment) the FIRST k of a segment are its smallest for asc
     // top-k; a desc top-k needs the segment's tail, so it reads the
-    // (suffix-selected) partitions fully and lets Spark sort
+    // (suffix-selected) segments fully and lets Spark sort. Only a
+    // plain LIMIT stops a packed task after k rows in total: a top-k
+    // needs every member's smallest, as a tail-appended segment may
+    // hold smaller keys than the members before it.
     new GraftReaderFactory(fullSchema, required, allFilters,
-      if (topNAsc.contains(false)) None else pushedLimit)
+      if (topNAsc.contains(false)) None else pushedLimit,
+      if (topNAsc.isEmpty) pushedLimit else None)
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new GraftMicroBatchStream(name, fullSchema, required, filters, batchRows)
@@ -570,6 +617,12 @@ object GraftInputPartition {
     GraftInputPartition(GraftStore.MemRows(rows))
 }
 
+/** Consecutive small segments read by one task (see [[GraftScan]]'s
+  * packing): the reader runs each member's reader in turn, and every
+  * member keeps its own `_segment` id and `_pos` base. */
+case class GraftPackedPartition(members: Vector[GraftInputPartition])
+    extends InputPartition
+
 /** A row-range slice of one segment's payload — micro-batch streaming
   * partitions. `fromRow`/`untilRow` are LOCAL ordinals within the
   * segment; `baseOffset` is the global ordinal of `fromRow` (the `_pos`
@@ -591,9 +644,13 @@ case class GraftKeyedInputPartition(payload: GraftStore.SegmentPayload,
   override def partitionKey(): InternalRow = key
 }
 
+/** Readers of a scan's partitions. `earlyStopK`: each segment's reader
+  * stops after k output rows. `taskStopK`: a packed task stops after k
+  * output rows in total (a plain LIMIT, where any k rows serve). */
 class GraftReaderFactory(fullSchema: StructType, required: StructType,
                          filters: Array[Filter],
-                         earlyStopK: Option[Int] = None)
+                         earlyStopK: Option[Int] = None,
+                         taskStopK: Option[Int] = None)
     extends PartitionReaderFactory {
 
   private def segmentIdOf(partition: InputPartition): Int = partition match {
@@ -682,7 +739,39 @@ class GraftReaderFactory(fullSchema: StructType, required: StructType,
         s"graft-store reader: unknown required column ${f.name}")
     }
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+  /** One task over packed segments: each member's reader in turn, at
+    * most one open at a time, stopping once `taskStopK` rows are out
+    * (`rows` counts what one `get` returns). */
+  private def chained[T](members: Vector[GraftInputPartition],
+                         open: InputPartition => PartitionReader[T],
+                         rows: T => Long): PartitionReader[T] =
+    new PartitionReader[T] {
+      private val pending = members.iterator
+      private val k = taskStopK.map(_.toLong).getOrElse(Long.MaxValue)
+      private var cur: PartitionReader[T] = _
+      private var out = 0L
+      override def next(): Boolean = {
+        while (out < k) {
+          if (cur == null) {
+            if (!pending.hasNext) return false
+            cur = open(pending.next())
+          }
+          if (cur.next()) { out += rows(cur.get()); return true }
+          cur.close(); cur = null
+        }
+        false
+      }
+      override def get(): T = cur.get()
+      override def close(): Unit = if (cur != null) { cur.close(); cur = null }
+    }
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    partition match {
+      case GraftPackedPartition(members) => chained(members, createReader, (_: InternalRow) => 1L)
+      case single => segmentReader(single)
+    }
+
+  private def segmentReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val (rows, raw, rowSchema) = filteredRows(partition)
     val gets = getters(segmentIdOf(partition), rowSchema)
     val it = rows
@@ -719,6 +808,8 @@ class GraftReaderFactory(fullSchema: StructType, required: StructType,
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
     partition match {
+      case GraftPackedPartition(members) =>
+        chained(members, createColumnarReader, (b: ColumnarBatch) => b.numRows.toLong)
       // whole disk segments decode pages STRAIGHT into column vectors —
       // no Group, no external Row, no re-boxing (GraftColumnar); slices
       // and memory payloads keep the row-repack path
@@ -903,7 +994,10 @@ class GraftWriteBuilder(name: String, schema: StructType,
   * segments (contiguous keys ⇒ disjoint zone maps ⇒ pruning works on
   * the very next scan) instead of shipping a shuffle's worth of rows to
   * the store and asking IT to re-sort. The same declared-need mechanism
-  * a real lakehouse sink (Iceberg/Delta) uses for clustered writes. */
+  * a real lakehouse sink (Iceberg/Delta) uses for clustered writes. A
+  * write whose task files become a disk collection's whole layout also
+  * declares how many range tasks it needs
+  * ([[GraftStore.writeLaysOut]]). */
 class GraftWrite(name: String, schema: StructType, truncate: Boolean,
                  shardKey: Option[String], queryId: String = "")
     extends Write with RequiresDistributionAndOrdering {
@@ -923,6 +1017,9 @@ class GraftWrite(name: String, schema: StructType, truncate: Boolean,
     case Some(k) => Array(Expressions.sort(Expressions.identity(k), SortDirection.ASCENDING))
     case None => Array.empty
   }
+  override def requiredNumPartitions(): Int =
+    if (shardKey.isDefined && GraftStore.writeLaysOut(name, truncate)) GraftStore.DefaultSegments
+    else 0
   override def toBatch: BatchWrite = new GraftBatchWrite(name, schema, truncate, shardKey)
   override def toStreaming: StreamingWrite =
     new GraftStreamingWrite(name, schema, truncate, shardKey, queryId)
@@ -930,24 +1027,92 @@ class GraftWrite(name: String, schema: StructType, truncate: Boolean,
 
 case class GraftCommitMessage(rows: Vector[Row]) extends WriterCommitMessage
 
+/** A task-landed segment file's manifest entry (None: the task had no
+  * rows and wrote nothing). */
+case class GraftSegmentMessage(written: Option[GraftStore.WrittenSegment])
+    extends WriterCommitMessage
+
 class GraftBatchWrite(name: String, schema: StructType, truncate: Boolean,
                       shardKey: Option[String] = None)
     extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new GraftWriterFactory(schema)
+  /** The pinned generation dir of a task-landed write; decided once,
+    * when Spark asks for the writer factory. */
+  @volatile private var genDir: Option[String] = None
+
+  /** A disk-backed collection without a cluster key has its write tasks
+    * land one parquet segment file each, in the write's pinned
+    * generation dir ([[GraftSegmentWriterFactory]]); memory-backed and
+    * clustered collections ship their rows ([[GraftWriterFactory]]),
+    * because rows are what the driver installs for them. */
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
+    val keyIdx = shardKey.map(k => schema.fieldNames.indexOf(k)).filter(_ >= 0)
+    genDir = GraftStore.openWrite(name, schema)
+    genDir match {
+      case Some(dir) => GraftSegmentWriterFactory(dir, schema, GraftStore.bloomSpec(name), keyIdx)
+      case None => new GraftWriterFactory(schema)
+    }
+  }
 
   /** Driver-side atomic commit: nothing lands in the store until every
-    * task has succeeded — the point of the two-phase protocol. A sharded
-    * write registers with its shard key, so the collection lands with
-    * range segments + zone maps (the rows already arrived clustered and
-    * sorted thanks to [[GraftWrite.requiredDistribution]]). */
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val rows = messages.iterator
-      .flatMap(_.asInstanceOf[GraftCommitMessage].rows).toVector
-    if (truncate) GraftStore.register(name, GraftStore.overwriteSchema(name, schema), rows, shardKey)
-    else GraftStore.append(name, schema, rows)
+    * task has succeeded — the point of the two-phase protocol. A
+    * task-landed write installs the segment files its tasks report
+    * ([[GraftStore.commitWritten]]: an append adds them as tail segments,
+    * a truncate installs them as the collection); a row-shipping write
+    * appends or re-registers its rows. A sharded write lands range
+    * segments + zone maps either way: the rows arrived clustered and
+    * sorted thanks to [[GraftWrite.requiredDistribution]], so each task's
+    * file (or the driver's re-shard) covers a contiguous key span. */
+  override def commit(messages: Array[WriterCommitMessage]): Unit = genDir match {
+    case Some(dir) =>
+      GraftStore.commitWritten(name, schema, truncate, shardKey, dir,
+        messages.iterator.flatMap(_.asInstanceOf[GraftSegmentMessage].written).toVector)
+    case None =>
+      val rows = messages.iterator
+        .flatMap(_.asInstanceOf[GraftCommitMessage].rows).toVector
+      if (truncate) GraftStore.register(name, GraftStore.overwriteSchema(name, schema), rows, shardKey)
+      else GraftStore.append(name, schema, rows)
   }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
+
+  /** A failed task-landed write deletes the files its committed tasks
+    * reported and unpins its generation dir (a failed task deletes its
+    * own file). */
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    genDir.foreach(dir => GraftStore.abortWritten(dir,
+      messages.iterator.collect { case GraftSegmentMessage(Some(w)) => w }.toVector))
+}
+
+/** Executor half of a task-landed write: each task streams its rows
+  * into ONE parquet file under the write's generation dir (opened at the
+  * first row, so an empty task lands nothing), tracking the row count
+  * and zone maps as rows pass. `commit` returns the file's manifest
+  * entry, never its rows. Top-level case class: it is serialized to
+  * executors. */
+case class GraftSegmentWriterFactory(dir: String, schema: StructType,
+                                     bloom: Map[String, Long], keyIdx: Option[Int])
+    extends DataWriterFactory {
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+    new DataWriter[InternalRow] {
+      private val path = s"$dir/seg-p$partitionId-t$taskId.parquet"
+      private val toRow = RowConverters.toRow(schema)
+      private val zones = new GraftStore.ZoneAcc(schema)
+      private var out: GraftParquet.SegmentWriter = _
+      private var nullKey = false
+
+      override def write(record: InternalRow): Unit = {
+        if (out == null) out = GraftParquet.open(path, schema, bloom)
+        val r = toRow(record)
+        zones.add(r)
+        if (keyIdx.exists(r.isNullAt)) nullKey = true
+        out.add(r)
+      }
+      override def commit(): WriterCommitMessage = GraftSegmentMessage(Option(out).map { w =>
+        w.close()
+        GraftStore.WrittenSegment(path, w.count, zones.result, GraftParquet.fileBytes(path), nullKey)
+      })
+      override def abort(): Unit =
+        if (out != null) try out.close() finally GraftParquet.delete(path)
+      override def close(): Unit = if (out != null) out.close()
+    }
 }
 
 /** Copy-on-write row-level operation (UPDATE/MERGE) with SEGMENT-level
@@ -1208,7 +1373,9 @@ case class GraftDeltaWriterFactory(schema: StructType)
   * an at-least-once engine, the standard idempotent-sink contract.
   * Append mode appends per epoch; Complete mode (truncate) overwrites
   * per epoch, which is idempotent by construction but still ledgered so
-  * a replayed epoch can't clobber a newer one. */
+  * a replayed epoch can't clobber a newer one. Unlike the batch path,
+  * epochs into a disk-backed collection still ship their rows, and the
+  * driver spills them. */
 class GraftStreamingWrite(name: String, schema: StructType, truncate: Boolean,
                           shardKey: Option[String] = None,
                           queryId: String = "")
@@ -1241,12 +1408,9 @@ case class GraftStreamingWriterFactory(schema: StructType)
 class GraftWriterFactory(schema: StructType) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
-      private val convs = schema.fields.map(f => RowConverters.toScala(f.dataType))
+      private val toRow = RowConverters.toRow(schema)
       private val buf = Vector.newBuilder[Row]
-      override def write(record: InternalRow): Unit =
-        buf += Row.fromSeq(Array.tabulate(schema.length) { i =>
-          convs(i)(record.get(i, schema(i).dataType))
-        }.toIndexedSeq)
+      override def write(record: InternalRow): Unit = buf += toRow(record)
       override def commit(): WriterCommitMessage = GraftCommitMessage(buf.result())
       override def abort(): Unit = ()
       override def close(): Unit = ()
@@ -1422,5 +1586,13 @@ object RowConverters {
         Row.fromSeq(Array.tabulate(st.length)(i => cs(i)(r.get(i, st(i).dataType))).toIndexedSeq)
       }
     case _ => identity
+  }
+
+  /** A write task's record as an external Row shaped by `schema`. */
+  def toRow(schema: StructType): InternalRow => Row = {
+    val convs = schema.fields.map(f => toScala(f.dataType))
+    rec => Row.fromSeq(Array.tabulate(schema.length) { i =>
+      convs(i)(rec.get(i, schema(i).dataType))
+    }.toIndexedSeq)
   }
 }

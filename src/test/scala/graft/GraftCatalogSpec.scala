@@ -388,8 +388,18 @@ class GraftCatalogSpec extends AnyFunSuite {
   }
 
   test("INSERT OVERWRITE keeps a DDL table's nullability; a later append of nulls lands") {
+    overwriteKeepsNullability("")
+  }
+
+  test("INSERT OVERWRITE keeps a disk table's nullability; a later append of nulls lands") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ow").toString
+    overwriteKeepsNullability(s"TBLPROPERTIES ('payload'='disk', 'payload.dir'='$dir')")
+    assert(new java.io.File(dir).list().nonEmpty, "the disk table's writes must land in its dir")
+  }
+
+  private def overwriteKeepsNullability(props: String): Unit = {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.lake")
-    spark.sql("CREATE TABLE graft_cat.lake.ow (id BIGINT, v STRING)")
+    spark.sql(s"CREATE TABLE graft_cat.lake.ow (id BIGINT, v STRING) $props")
     // a frame whose own schema is non-null in both columns
     val nonNull = spark.range(3).selectExpr("id", "cast(id AS string) AS v")
     assert(!nonNull.schema.exists(_.nullable))
